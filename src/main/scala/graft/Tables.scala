@@ -29,15 +29,17 @@ object Tables {
     * value is the inference result itself (computed from the parquet on
     * first touch — no hand-written schema to drift), and user-specified
     * schemas read file sources all-nullable exactly like inference, so the
-    * resulting DataFrame is identical. No row data is cached. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
-      org.apache.spark.sql.types.StructType]()
+    * resulting DataFrame is identical. No row data is cached. One entry
+    * per path, `(length, mtime, schema)`: a file rebuilt in place replaces
+    * its entry instead of adding a generation. */
+  private[graft] val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      (Long, Long, org.apache.spark.sql.types.StructType)]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") enableNanos(spark)
     val path = s"$sfDir/$name.parquet"
-    // Key on (path, length, mtime), not path alone: a base table
+    // Validate on (length, mtime), not path alone: a base table
     // regenerated at the same path within one JVM (a fixture rebuild
     // mid-session) must re-infer instead of silently reading with the
     // stale schema. One local stat per table construction — micro vs the
@@ -45,9 +47,10 @@ object Tables {
     val st = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(new org.apache.hadoop.fs.Path(path))
-    val schema = schemaCache.computeIfAbsent(
-      (path, st.getLen, st.getModificationTime),
-      _ => spark.read.parquet(path).schema)
+    val (len, mtime) = (st.getLen, st.getModificationTime)
+    val schema = schemaCache.compute(path, (_, old) =>
+      if (old != null && old._1 == len && old._2 == mtime) old
+      else (len, mtime, spark.read.parquet(path).schema))._3
     val df = spark.read.schema(schema).parquet(path)
     if (name == "events") normalizeEventTs(df) else df
   }

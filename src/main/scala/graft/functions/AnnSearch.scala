@@ -301,9 +301,10 @@ object AnnSearch {
     // a ranking of the ≤nC-row driver-side artifact against ONE query row
     // (the quantized vector is collected once; bounded, never data). The
     // former relational spelling paid a broadcast-build job per ranking.
-    val qq = queryDf.select(
-        expr("transform(qv, x -> round(cast(x as double) * 10000))").as("__qq"))
-      .head().getSeq[Double](0).toArray
+    val qq = quantizedQuery(queryDf) match {
+      case Some(q) => q
+      case None    => return noMatches(embeddings, queryDf, idCol, vecCol)
+    }
     val qgIds = topIdsByScore(qq,
       coarseL.map(g => (g.cid, g.cv, g.cn2)), gProbe).toSet
     val probes = topIdsByScore(qq,
@@ -462,6 +463,10 @@ object AnnSearch {
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
+    val qq = quantizedQuery(queryDf) match {
+      case Some(q) => q
+      case None    => return noMatches(embeddings, queryDf, idCol, vecCol)
+    }
     val eq = quantize(embeddings, idCol, vecCol)
     val cent = trainCentroids(eq, nCentroids, trainN, idCol)
     val (coarseL, f2gL) = coarseFineLocal(collectCent(cent), nCoarse)
@@ -473,9 +478,6 @@ object AnnSearch {
     val codes = pqEncode(eq, book, m, dsub, idCol)
     // Query probes: identical coarse/fine selection to ivfTopK, ranked on
     // the driver over the collected centroid artifact.
-    val qq = queryDf.select(
-        expr("transform(qv, x -> round(cast(x as double) * 10000))").as("__qq"))
-      .head().getSeq[Double](0).toArray
     val qgIds = topIdsByScore(qq,
       coarseL.map(g => (g.cid, g.cv, g.cn2)), gProbe).toSet
     val probes = topIdsByScore(qq,
@@ -665,6 +667,20 @@ object AnnSearch {
     s
   }
 
+  /** The quantized vector of the single query row of `queryDf` (column
+    * `qv`), collected once; None when the query set is empty. */
+  private def quantizedQuery(queryDf: DataFrame): Option[Array[Double]] =
+    queryDf.select(
+        expr("transform(qv, x -> round(cast(x as double) * 10000))"))
+      .head(1).headOption.map(_.getSeq[Double](0).toArray)
+
+  /** The (idCol, cos) result of a query path for an empty query set: no
+    * rows, the same schema as a non-empty answer. */
+  private def noMatches(embeddings: DataFrame, queryDf: DataFrame,
+                        idCol: String, vecCol: String): DataFrame =
+    embeddings.limit(0).crossJoin(queryDf.limit(0))
+      .select(col(idCol), cosine(col(vecCol), col("qv")).as("cos"))
+
   /** The trained-centroid artifact collected to the driver, cid-sorted. */
   private[graft] def collectCent(cent: DataFrame): IndexedSeq[CentRow] =
     cent.select(col("cid").cast("long"), col("cv"), col("__cn2"))
@@ -681,6 +697,8 @@ object AnnSearch {
   private[graft] def coarseFineLocal(rows: IndexedSeq[CentRow], nCoarse: Int)
       : (IndexedSeq[CentRow], IndexedSeq[(CentRow, Long)]) = {
     val coarse = rows.take(nCoarse)
+    // no coarse cell to map into: no fine list is reachable
+    if (coarse.isEmpty) return (coarse, IndexedSeq.empty)
     val f2g = rows.map { c =>
       var bestS = Double.NegativeInfinity
       var bestG = Long.MaxValue

@@ -47,18 +47,16 @@ import scala.jdk.CollectionConverters._
   * filesystem the claim is a hard link (atomic fail-if-exists at the
   * syscall level); elsewhere `FileContext.rename(…, Rename.NONE)`, which
   * is the Hadoop contract an object-store commit service implements as
-  * putIfAbsent. Exactly one of N racing writers wins a version. A loser
-  * re-resolves the latest version and checks the manifest tail it lost to:
-  *   - a BLIND APPEND conflicts with nothing and rebases to latest+1,
-  *     reusing its already-written data files (only the manifest moves);
-  *   - a MERGE / OPTIMIZE / DELETE computed its output against a snapshot
-  *     of its affected partitions, so if any intervening commit touched
-  *     one of those partitions the update would be lost — it deletes its
-  *     unpublished files and aborts with [[ConcurrentModificationException]]
-  *     (Delta's ConcurrentAppend/ConcurrentDeleteRead semantics); if the
-  *     tail is disjoint it rebases and retries.
-  * A writer crash before publish leaves only orphan data files that vacuum
-  * removes once they age past the latest manifest (see below). Readers
+  * putIfAbsent. Exactly one of N racing writers wins a version. Every verb
+  * publishes through the one commit path, [[commitAttempt]]: a loser checks
+  * the manifest tail it lost to and either deletes its unpublished files
+  * and aborts with [[ConcurrentModificationException]] (a schema/constraint
+  * change raced it, or a commit touched a partition it read — Delta's
+  * MetadataChanged/ConcurrentAppend semantics) or rebases to latest+1,
+  * reusing its already-written data files (only the manifest moves).
+  * A writer crash before publish leaves only orphan files (data, or an
+  * unclaimed temp manifest) that vacuum removes once they age past the
+  * latest manifest (see below). Readers
   * resolve a snapshot's file list once and are then immune to concurrent
   * commits — files are immutable and stay on disk until vacuum passes
   * retention — which is the snapshot-isolation guarantee (spec-asserted: a
@@ -273,13 +271,7 @@ object VersionedTable {
     * (the multi-commit fixtures used to pay ~200 ms of planning/scheduling
     * for every 200-byte manifest read). */
   private def logRows(spark: SparkSession, path: String, from: Int, to: Int)
-      : Seq[LogEntry] = {
-    val files = ((from + 1) to to).map(v =>
-      new Path(f"${logDir(path)}/v$v%05d.parquet"))
-    if (files.isEmpty) Nil
-    else LogCodec.read(spark.sparkContext.hadoopConfiguration, files)
-      .map(_.entry)
-  }
+      : Seq[LogEntry] = logRowsFull(spark, path, from, to).map(_.entry)
 
   /** [[logRows]] keeping the commit-metadata columns (`ts`, `op`). */
   private def logRowsFull(spark: SparkSession, path: String,
@@ -926,6 +918,15 @@ object VersionedTable {
     won
   }
 
+  /** Metadata-channel entries for [[commitAttempt]]'s `evolves`: the
+    * table schema from this commit on, and a CHECK constraint (None: the
+    * per-name drop marker). Publish stamps the claimed version. */
+  private def evolveEntry(schema: StructType): LogEntry =
+    LogEntry(-1, "evolve", "", "", None, None, Some(schema.json))
+
+  private def constraintEntry(name: String, expr: Option[String]): LogEntry =
+    LogEntry(-1, "constraint", s"_constraint/$name", "", None, None, expr)
+
   private def claimIfAbsent(spark: SparkSession, f: FileSystem,
                             src: Path, dest: Path): Boolean =
     if (f.getScheme == "file") {
@@ -955,56 +956,74 @@ object VersionedTable {
       .foreach(dir => f.delete(new Path(s"$path/$dir"), true))
   }
 
-  /** The optimistic-commit loop: claim readVersion+1; on losing the race,
-    * check the manifest tail we lost to against `affected` — None means a
-    * blind append (conflicts with nothing → always rebase); Some(parts)
-    * aborts if any intervening commit touched one of those partitions
-    * (our output is stale for them — Delta's conflict semantics), else
-    * rebases the SAME data files to the next version (manifest-only). */
   /** Retries are bounded: each failed claim means ANOTHER writer published
-    * a version, so `maxAttempts` losses in a row is either contention far
+    * a version, so this many losses in a row is either contention far
     * past what optimistic concurrency should absorb or a filesystem whose
     * claim errors rather than returning false — both must surface, not
-    * spin. The per-retry backoff (linear, small) de-synchronizes herds of
-    * blind appenders; a jittered exponential is the production knob. */
+    * spin. */
   private val MaxCommitAttempts = 64
 
+  /** True for a manifest row that creates the table or changes its
+    * metadata (schema or CHECK constraints) — what every other commit's
+    * validation was computed against. */
+  private def changesMetadata(e: LogEntry): Boolean =
+    e.version == 0 || e.action == "evolve" || e.action == "constraint"
+
+  /** The one commit path every verb publishes through: claim
+    * `readVersion + 1` (`readVersion = -1` creates the table). On a lost
+    * claim, the manifests in (readVersion, latest] are read once and one
+    * rule decides (Delta's MetadataChangedException rule plus partition
+    * write conflicts):
+    *   - a METADATA transaction — it publishes an `evolve` or `constraint`
+    *     entry, or claims version 0 — validated the exact snapshot it
+    *     read, so it aborts if any intervening commit is not a `noop`;
+    *   - any other non-empty transaction aborts if an intervening commit
+    *     created or altered the table (its schema and CHECK validation is
+    *     stale), or touched a partition in `affected`, the partitions it
+    *     read (None: a blind append, which read none);
+    *   - otherwise it rebases the SAME files to latest+1 (manifest-only).
+    * Aborting deletes `owned`, the files this attempt wrote (default:
+    * every add and tomb). Verbs that RE-REFERENCE files another commit or
+    * directory owns (restore's zero-copy re-adds, convert, clone) pass
+    * only what they wrote themselves. */
   private[graft] def commitAttempt(spark: SparkSession, path: String,
                                    readVersion: Int,
                                    adds: Seq[LogEntry], tombs: Seq[LogEntry],
                                    removes: Seq[(String, String)],
                                    affected: Option[Set[String]],
                                    opName: String, ts: Option[Long],
-                                   ownsNewFiles: Boolean = true,
+                                   owned: Option[Seq[LogEntry]] = None,
                                    evolves: Seq[LogEntry] = Nil): Commit = {
-    // ownsNewFiles = false when `adds` RE-REFERENCE files older commits
-    // still own (restoreCommit's zero-copy re-add): aborting must then
-    // leave them on disk — cleanupAttempt would delete live table data
-    def abortCleanup(): Unit =
-      if (ownsNewFiles) cleanupAttempt(spark, path, adds ++ tombs)
+    val metadata = readVersion < 0 || evolves.nonEmpty
+    val empty = adds.isEmpty && tombs.isEmpty && removes.isEmpty && !metadata
+    def abort(msg: String): Nothing = {
+      cleanupAttempt(spark, path, owned.getOrElse(adds ++ tombs))
+      throw new ConcurrentModificationException(s"commit at $path: $msg")
+    }
     var v = readVersion + 1
+    var checked = readVersion // manifests up to here are already checked
     var attempts = 0
     while (!publishIfAbsent(spark, path, v, adds, tombs, removes, opName, ts,
         evolves)) {
       attempts += 1
-      if (attempts >= MaxCommitAttempts) {
-        abortCleanup()
-        throw new ConcurrentModificationException(
-          s"commit at $path lost the version race $attempts times " +
-          s"(last tried v$v) — contention beyond optimistic-commit limits " +
-          "or a claim mechanism that cannot report loss")
-      }
+      if (attempts >= MaxCommitAttempts)
+        abort(s"lost the version race $attempts times (last tried v$v) — " +
+          "contention beyond optimistic-commit limits or a claim mechanism " +
+          "that cannot report loss")
       val latest = math.max(latestVersion(spark, path), v)
-      affected.foreach { parts =>
-        val clash = logRows(spark, path, readVersion, latest)
-          .filter(e => e.action != "noop" && parts(e.part))
-        if (clash.nonEmpty) {
-          abortCleanup()
-          throw new ConcurrentModificationException(
-            s"commit conflict at $path: versions ($readVersion, $latest] " +
-            s"touched partitions ${clash.map(_.part).distinct.take(5).mkString(", ")}")
-        }
+      if (!empty) {
+        val clash = logRows(spark, path, checked, latest).filter(e =>
+          changesMetadata(e) ||
+          (if (metadata) e.action != "noop" else affected.exists(_(e.part))))
+        if (clash.nonEmpty) abort(
+          if (metadata || clash.exists(changesMetadata))
+            s"versions ($readVersion, $latest] changed the table after this " +
+            "commit validated its schema and constraints"
+          else s"versions ($readVersion, $latest] touched partitions " +
+            clash.map(_.part).distinct.take(5).mkString(", "))
       }
+      checked = latest
+      // linear, small backoff de-synchronizes herds of blind appenders
       if (attempts > 1) Thread.sleep(math.min(100L, 5L * attempts))
       v = latest + 1
     }
@@ -1022,11 +1041,7 @@ object VersionedTable {
     require(latestVersion(spark, path) < 0, s"create: $path already has a log")
     val adds = writeCommitFiles(spark, path, 0, df, partitionCol, statsCol,
       fileSplits)
-    if (!publishIfAbsent(spark, path, 0, adds, Nil, Nil, opName, ts)) {
-      cleanupAttempt(spark, path, adds)
-      throw new ConcurrentModificationException(s"concurrent create at $path")
-    }
-    Commit(0, adds.size, 0)
+    commitAttempt(spark, path, -1, adds, Nil, Nil, None, opName, ts)
   }
 
   /** CONVERT an existing plain parquet layout into a versioned table IN
@@ -1098,11 +1113,9 @@ object VersionedTable {
         nrec = Some(LogCodec.footerRowCount(hconf, new Path(s"$path/$rel"))),
         None, None, fsize = Some(flen), fmtime = Some(fmt))
     }
-    if (!publishIfAbsent(spark, path, 0, adds, Nil, Nil, "convert", ts))
-      // we own none of these files: on a lost race, clean NOTHING
-      throw new ConcurrentModificationException(
-        s"concurrent create/convert at $path")
-    Commit(0, adds.size, 0)
+    // we own none of these files: on a lost race, clean NOTHING
+    commitAttempt(spark, path, -1, adds, Nil, Nil, None, "convert", ts,
+      owned = Some(Nil))
   }
 
   /** SHALLOW CLONE — fork a table's snapshot as a NEW table, zero-copy
@@ -1144,23 +1157,13 @@ object VersionedTable {
       e.copy(version = 0, file = resolveFile(srcPath, e.file)))
     val adds = refs.filter(_.action == "add")
     val tombs = refs.filter(_.action == "tomb")
-    val schemaEntry =
-      read(spark, srcPath, srcVersion, mergeSchema = true).schema match {
-      case s if s.nonEmpty =>
-        Seq(LogEntry(0, "evolve", "_evolve/v00000", "", None, None,
-          Some(s.json)))
-      case _ => Nil
-    }
+    val schema = read(spark, srcPath, srcVersion, mergeSchema = true).schema
+    val schemaEntry = if (schema.nonEmpty) Seq(evolveEntry(schema)) else Nil
     val consEntries = constraintsAt(spark, srcPath, srcVersion).toSeq
-      .map { case (n, ex) =>
-        LogEntry(0, "constraint", s"_constraint/$n", "", None, None,
-          Some(ex)) }
-    if (!publishIfAbsent(spark, dstPath, 0, adds, tombs, Nil, "clone", ts,
-        evolves = schemaEntry ++ consEntries))
-      // we own none of the referenced files: on a lost race, clean NOTHING
-      throw new ConcurrentModificationException(
-        s"concurrent create/clone at $dstPath")
-    Commit(0, adds.size + tombs.size, 0)
+      .map { case (n, ex) => constraintEntry(n, Some(ex)) }
+    // we own none of the referenced files: on a lost race, clean NOTHING
+    commitAttempt(spark, dstPath, -1, adds, tombs, Nil, None, "clone", ts,
+      owned = Some(Nil), evolves = schemaEntry ++ consEntries)
   }
 
   /** Exactly-once streaming-sink markers, Delta SetTransaction-style but
@@ -1496,49 +1499,35 @@ object VersionedTable {
       require(g.size == 1,
         s"addColumnsCommit: duplicate new column '${g.head.name}'")
     }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val cur = latestVersion(spark, path)
-      require(cur >= 0,
-        s"addColumnsCommit: $path has no version 0 — create() first")
-      val current = read(spark, path, cur, mergeSchema = true).schema
-      cols.foreach { f =>
-        require(!current.exists(g => resolver(g.name, f.name)),
-          s"addColumnsCommit: column '${f.name}' already exists")
-      }
-      // name-addressed log: re-adding a name some LIVE file still carries
-      // (a previously DROPPED column) would resurface that file's old
-      // values instead of null — Delta needs column mapping for this;
-      // without it the re-add must be refused until a rewrite (OPTIMIZE)
-      // purges the physical column
-      val carried = liveEntries(spark, path, cur)
-        .flatMap(_.fschema).distinct
-        .flatMap(j => DataType.fromJson(j) match {
-          case s: StructType => s.fieldNames.toSeq
-          case _             => Nil
-        }).toSet
-      cols.foreach { f =>
-        require(!carried.exists(resolver(_, f.name)),
-          s"addColumnsCommit: a live data file still carries a dropped " +
-          s"column named '${f.name}' — its old values would resurface; " +
-          "OPTIMIZE the table first to purge it, then re-add")
-      }
-      val widened =
-        StructType(current.fields ++ cols.map(_.copy(nullable = true)))
-      val v = cur + 1
-      val entry = LogEntry(v, "evolve", f"_evolve/v$v%05d", "",
-        None, None, Some(widened.json))
-      if (publishIfAbsent(spark, path, v, Nil, Nil, Nil, "add_columns", ts,
-          evolves = Seq(entry)))
-        return Commit(v, 0, 0)
-      if (attempts >= MaxCommitAttempts)
-        throw new ConcurrentModificationException(
-          s"addColumnsCommit: lost $attempts commit races at $path")
-      // losing the race just means another writer took v — re-resolve the
-      // schema against the new latest and re-claim (pure metadata rebase)
+    val cur = latestVersion(spark, path)
+    require(cur >= 0,
+      s"addColumnsCommit: $path has no version 0 — create() first")
+    val current = read(spark, path, cur, mergeSchema = true).schema
+    cols.foreach { f =>
+      require(!current.exists(g => resolver(g.name, f.name)),
+        s"addColumnsCommit: column '${f.name}' already exists")
     }
-    throw new IllegalStateException("unreachable")
+    // name-addressed log: re-adding a name some LIVE file still carries
+    // (a previously DROPPED column) would resurface that file's old
+    // values instead of null — Delta needs column mapping for this;
+    // without it the re-add must be refused until a rewrite (OPTIMIZE)
+    // purges the physical column
+    val carried = liveEntries(spark, path, cur)
+      .flatMap(_.fschema).distinct
+      .flatMap(j => DataType.fromJson(j) match {
+        case s: StructType => s.fieldNames.toSeq
+        case _             => Nil
+      }).toSet
+    cols.foreach { f =>
+      require(!carried.exists(resolver(_, f.name)),
+        s"addColumnsCommit: a live data file still carries a dropped " +
+        s"column named '${f.name}' — its old values would resurface; " +
+        "OPTIMIZE the table first to purge it, then re-add")
+    }
+    val widened =
+      StructType(current.fields ++ cols.map(_.copy(nullable = true)))
+    commitAttempt(spark, path, cur, Nil, Nil, Nil, None, "add_columns", ts,
+      evolves = Seq(evolveEntry(widened)))
   }
 
   /** Schema narrowing as a METADATA-ONLY commit (Delta's ALTER TABLE DROP
@@ -1562,51 +1551,39 @@ object VersionedTable {
         s"dropColumnsCommit: '$n' is a partition column — rows are " +
         "addressed by (key, partition); repartition via a rewrite instead")
     }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val cur = latestVersion(spark, path)
-      require(cur >= 0,
-        s"dropColumnsCommit: $path has no version 0 — create() first")
-      val current = read(spark, path, cur, mergeSchema = true).schema
-      names.foreach { n =>
-        require(current.exists(f => resolver(f.name, n)),
-          s"dropColumnsCommit: column '$n' does not exist")
-      }
-      // live tombstones name their columns as the DELETE IDENTITY — the
-      // snapshot read anti-joins on exactly that set, so dropping one
-      // would make every snapshot read fail to resolve it. Refuse until a
-      // rewrite retires the tombstones (OPTIMIZE materializes the
-      // deletions). A tombstone predating schema recording is
-      // conservatively assumed to use the column.
-      val tombCols = liveEntries(spark, path, cur)
-        .filter(_.action == "tomb")
-        .map(_.fschema.flatMap(j => DataType.fromJson(j) match {
-          case s: StructType => Some(s.fieldNames.toSeq)
-          case _             => None
-        }))
-      names.foreach { n =>
-        require(!tombCols.exists(_.forall(_.exists(resolver(_, n)))),
-          s"dropColumnsCommit: live tombstones use '$n' as a " +
-          "delete-identity column — the snapshot anti-join would lose " +
-          "it; OPTIMIZE the table first to materialize the deletions")
-      }
-      requireNoConstraintRef(spark, path, cur, names, "dropColumnsCommit")
-      val narrowed = StructType(current.fields.filterNot(f =>
-        names.exists(resolver(f.name, _))))
-      require(narrowed.nonEmpty,
-        "dropColumnsCommit: cannot drop every column")
-      val v = cur + 1
-      val entry = LogEntry(v, "evolve", f"_evolve/v$v%05d", "",
-        None, None, Some(narrowed.json))
-      if (publishIfAbsent(spark, path, v, Nil, Nil, Nil, "drop_columns", ts,
-          evolves = Seq(entry)))
-        return Commit(v, 0, 0)
-      if (attempts >= MaxCommitAttempts)
-        throw new ConcurrentModificationException(
-          s"dropColumnsCommit: lost $attempts commit races at $path")
+    val cur = latestVersion(spark, path)
+    require(cur >= 0,
+      s"dropColumnsCommit: $path has no version 0 — create() first")
+    val current = read(spark, path, cur, mergeSchema = true).schema
+    names.foreach { n =>
+      require(current.exists(f => resolver(f.name, n)),
+        s"dropColumnsCommit: column '$n' does not exist")
     }
-    throw new IllegalStateException("unreachable")
+    // live tombstones name their columns as the DELETE IDENTITY — the
+    // snapshot read anti-joins on exactly that set, so dropping one
+    // would make every snapshot read fail to resolve it. Refuse until a
+    // rewrite retires the tombstones (OPTIMIZE materializes the
+    // deletions). A tombstone predating schema recording is
+    // conservatively assumed to use the column.
+    val tombCols = liveEntries(spark, path, cur)
+      .filter(_.action == "tomb")
+      .map(_.fschema.flatMap(j => DataType.fromJson(j) match {
+        case s: StructType => Some(s.fieldNames.toSeq)
+        case _             => None
+      }))
+    names.foreach { n =>
+      require(!tombCols.exists(_.forall(_.exists(resolver(_, n)))),
+        s"dropColumnsCommit: live tombstones use '$n' as a " +
+        "delete-identity column — the snapshot anti-join would lose " +
+        "it; OPTIMIZE the table first to materialize the deletions")
+    }
+    requireNoConstraintRef(spark, path, cur, names, "dropColumnsCommit")
+    val narrowed = StructType(current.fields.filterNot(f =>
+      names.exists(resolver(f.name, _))))
+    require(narrowed.nonEmpty,
+      "dropColumnsCommit: cannot drop every column")
+    commitAttempt(spark, path, cur, Nil, Nil, Nil, None, "drop_columns", ts,
+      evolves = Seq(evolveEntry(narrowed)))
   }
 
   /** Active CHECK constraints of snapshot `version`: name → boolean SQL
@@ -1639,67 +1616,43 @@ object VersionedTable {
     require(name.matches("\\w+"),
       s"addConstraintCommit: constraint name must be a plain identifier, " +
       s"got '$name'")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val cur = latestVersion(spark, path)
-      require(cur >= 0,
-        s"addConstraintCommit: $path has no version 0 — create() first")
-      require(!constraintsAt(spark, path, cur).keys
-          .exists(_.equalsIgnoreCase(name)),
-        s"addConstraintCommit: constraint '$name' already exists")
-      val df = read(spark, path, cur, mergeSchema = true)
-      // the expression must analyze as BOOLEAN over the current schema
-      val dt = try df.selectExpr(s"($expr) AS __c").schema.head.dataType
-        catch { case e: Exception => throw new IllegalArgumentException(
-          s"addConstraintCommit: CHECK ($expr) does not resolve against " +
-          s"the table schema: ${e.getMessage}", e) }
-      require(dt == org.apache.spark.sql.types.BooleanType,
-        s"addConstraintCommit: CHECK ($expr) must be BOOLEAN, got $dt")
-      val bad = df.filter(org.apache.spark.sql.functions.not(
-        coalesce(expression(spark, expr), lit(true)))).take(1)
-      require(bad.isEmpty,
-        s"addConstraintCommit: existing rows violate CHECK ($expr), " +
-        s"e.g. ${bad.headOption.getOrElse("")}")
-      val v = cur + 1
-      val entry = LogEntry(v, "constraint", s"_constraint/$name", "",
-        None, None, Some(expr))
-      if (publishIfAbsent(spark, path, v, Nil, Nil, Nil, "add_constraint",
-          ts, evolves = Seq(entry)))
-        return Commit(v, 0, 0)
-      if (attempts >= MaxCommitAttempts)
-        throw new ConcurrentModificationException(
-          s"addConstraintCommit: lost $attempts commit races at $path")
-    }
-    throw new IllegalStateException("unreachable")
+    val cur = latestVersion(spark, path)
+    require(cur >= 0,
+      s"addConstraintCommit: $path has no version 0 — create() first")
+    require(!constraintsAt(spark, path, cur).keys
+        .exists(_.equalsIgnoreCase(name)),
+      s"addConstraintCommit: constraint '$name' already exists")
+    val df = read(spark, path, cur, mergeSchema = true)
+    // the expression must analyze as BOOLEAN over the current schema
+    val dt = try df.selectExpr(s"($expr) AS __c").schema.head.dataType
+      catch { case e: Exception => throw new IllegalArgumentException(
+        s"addConstraintCommit: CHECK ($expr) does not resolve against " +
+        s"the table schema: ${e.getMessage}", e) }
+    require(dt == org.apache.spark.sql.types.BooleanType,
+      s"addConstraintCommit: CHECK ($expr) must be BOOLEAN, got $dt")
+    val bad = df.filter(org.apache.spark.sql.functions.not(
+      coalesce(expression(spark, expr), lit(true)))).take(1)
+    require(bad.isEmpty,
+      s"addConstraintCommit: existing rows violate CHECK ($expr), " +
+      s"e.g. ${bad.headOption.getOrElse("")}")
+    commitAttempt(spark, path, cur, Nil, Nil, Nil, None, "add_constraint",
+      ts, evolves = Seq(constraintEntry(name, Some(expr))))
   }
 
   /** `ALTER TABLE DROP CONSTRAINT name` — a metadata commit writing the
     * per-name drop marker (an entry with no expression). */
   def dropConstraintCommit(spark: SparkSession, path: String, name: String,
                            ts: Option[Long] = None): Commit = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val cur = latestVersion(spark, path)
-      require(cur >= 0,
-        s"dropConstraintCommit: $path has no version 0 — create() first")
-      val active = constraintsAt(spark, path, cur)
-      val actual = active.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(
-          s"dropConstraintCommit: no active constraint named '$name' " +
-          s"(active: ${active.keys.mkString(", ")})"))
-      val v = cur + 1
-      val entry = LogEntry(v, "constraint", s"_constraint/$actual", "",
-        None, None, None)
-      if (publishIfAbsent(spark, path, v, Nil, Nil, Nil, "drop_constraint",
-          ts, evolves = Seq(entry)))
-        return Commit(v, 0, 0)
-      if (attempts >= MaxCommitAttempts)
-        throw new ConcurrentModificationException(
-          s"dropConstraintCommit: lost $attempts commit races at $path")
-    }
-    throw new IllegalStateException("unreachable")
+    val cur = latestVersion(spark, path)
+    require(cur >= 0,
+      s"dropConstraintCommit: $path has no version 0 — create() first")
+    val active = constraintsAt(spark, path, cur)
+    val actual = active.keys.find(_.equalsIgnoreCase(name)).getOrElse(
+      throw new IllegalArgumentException(
+        s"dropConstraintCommit: no active constraint named '$name' " +
+        s"(active: ${active.keys.mkString(", ")})"))
+    commitAttempt(spark, path, cur, Nil, Nil, Nil, None, "drop_constraint",
+      ts, evolves = Seq(constraintEntry(actual, None)))
   }
 
   private def expression(spark: SparkSession, sql: String) =
@@ -1816,29 +1769,20 @@ object VersionedTable {
     // version would bring the files back but keep the narrowed schema
     // (and the re-ADD escape hatch is itself refused while those files
     // still carry the column). Schema-only restores (across a
-    // metadata-only ALTER) commit the evolve entry alone. Concurrent
-    // schema changes racing the restore resolve last-writer-wins, like
-    // any two evolve commits.
+    // metadata-only ALTER) commit the evolve entry alone; a restore that
+    // carries one is a metadata commit, so any racing commit aborts it.
     val schemaEvolve: Seq[LogEntry] =
       if (replayEntries(spark, path, cur).forall(_.action != "evolve")) Nil
       else {
         val tgt = read(spark, path, toVersion).schema
         if (tgt == read(spark, path, cur).schema) Nil
-        else Seq(LogEntry(cur + 1, "evolve", f"_evolve/v${cur + 1}%05d", "",
-          None, None, Some(tgt.json)))
+        else Seq(evolveEntry(tgt))
       }
-    if (adds.isEmpty && removes.isEmpty)
-      return commitAttempt(spark, path, cur, Nil, Nil, Nil,
-        Some(Set.empty), "restore", ts, evolves = schemaEvolve)
     val affected = (adds.map(_.part) ++ removes.map(_._2)).toSet
-    // ownsNewFiles = false: the zero-copy re-adds belong to older commits;
-    // an aborted attempt must only clean the freshly-materialized files
-    try commitAttempt(spark, path, cur, adds, Nil, removes, Some(affected),
-      "restore", ts, ownsNewFiles = false, evolves = schemaEvolve)
-    catch { case e: java.util.ConcurrentModificationException =>
-      if (matAdds.nonEmpty) cleanupAttempt(spark, path, matAdds)
-      throw e
-    }
+    // the zero-copy re-adds belong to older commits; an aborted attempt
+    // must only clean the freshly-materialized files
+    commitAttempt(spark, path, cur, adds, Nil, removes, Some(affected),
+      "restore", ts, owned = Some(matAdds), evolves = schemaEvolve)
   }
 
   /** OPTIMIZE as a commit — lake-maintenance compaction INSIDE the log:
@@ -1911,17 +1855,15 @@ object VersionedTable {
     // commit, so pruning stays coherent)
     val effStats = statsCol.map(s => if (resolver(s, from)) to else s)
     val renamed = current.withColumnRenamed(from, to)
-    def evolveAt(v: Int) = LogEntry(v, "evolve", f"_evolve/v$v%05d", "",
-      None, None, Some(renamed.schema.json))
     val removes = liveEntries(spark, path, cur).map(e => (e.file, e.part))
-    if (removes.isEmpty)
-      return commitAttempt(spark, path, cur, Nil, Nil, Nil,
-        Some(Set.empty), "rename_column", ts, evolves = Seq(evolveAt(cur + 1)))
-    val adds = writeCommitFiles(spark, path, cur + 1, renamed, partitionCol,
-      effStats)
-    commitAttempt(spark, path, cur, adds, Nil, removes,
-      Some(removes.map(_._2).toSet ++ adds.map(_.part)), "rename_column",
-      ts, evolves = Seq(evolveAt(cur + 1)))
+    val adds =
+      if (removes.isEmpty) Nil
+      else writeCommitFiles(spark, path, cur + 1, renamed, partitionCol,
+        effStats)
+    // a metadata commit: any racing non-empty commit aborts it, so it
+    // needs no partition scope
+    commitAttempt(spark, path, cur, adds, Nil, removes, None, "rename_column",
+      ts, evolves = Seq(evolveEntry(renamed.schema)))
   }
 
   /** OPTIMIZE ... ZORDER BY as a commit — re-CLUSTERING inside the log
@@ -2196,8 +2138,10 @@ object VersionedTable {
     * windows but is ONLY safe when no writer is concurrently committing —
     * with grace 0, vacuum racing a loser's rebase can reap its unpublished
     * files and the rebased manifest would then reference deleted data.
-    * Orphans from CRASHED commits age past the grace (and the next
-    * successful commit's manifest) and are then reclaimed. Returns the
+    * Orphans from CRASHED commits — data files, and the temp manifest or
+    * checkpoint a writer dies holding before its claim or rename — age
+    * past the grace (and the next successful commit's manifest) and are
+    * then reclaimed. Returns the
     * deleted relative paths. Live data of retained versions is untouched —
     * grading reads the latest snapshot back after vacuuming. */
   def vacuum(spark: SparkSession, path: String, retainLast: Int,
@@ -2224,11 +2168,15 @@ object VersionedTable {
       .toSet
     val rootPrefix = new Path(path).toUri.getPath + "/"
     val skipDirs = Set("_log", "_ckpt")
-    val tops = f.listStatus(new Path(path)).filter { st =>
-      val n = st.getPath.getName
-      !skipDirs(n) && !n.startsWith("_logtmp_") && !n.startsWith("_ckpttmp_")
-    }
+    val tops = f.listStatus(new Path(path))
+      .filter(st => !skipDirs(st.getPath.getName))
     val deleted = Seq.newBuilder[String]
+    // a temp manifest or checkpoint left by a writer that died before its
+    // claim or rename: never referenced, so reaped under the same age
+    // cutoff as any other unpublished file (the checksummed local
+    // filesystem hides and deletes its `.crc` sidecar with it)
+    def isTempLog(n: String) =
+      n.startsWith("_logtmp_") || n.startsWith("_ckpttmp_")
     def consider(p: Path, mtime: Long): Unit =
       if (p.getName.endsWith(".parquet")) {
         val rel = p.toUri.getPath.stripPrefix(rootPrefix)
@@ -2238,7 +2186,12 @@ object VersionedTable {
         }
       }
     tops.foreach { top =>
-      if (top.isDirectory) {
+      val n = top.getPath.getName
+      if (isTempLog(n)) {
+        if (top.getModificationTime < cutoff) {
+          f.delete(top.getPath, false); deleted += n
+        }
+      } else if (top.isDirectory) {
         val it = f.listFiles(top.getPath, true)
         while (it.hasNext) {
           val st = it.next()

@@ -190,4 +190,52 @@ class EdgeCaseSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 2L, 2L -> 1L))
   }
+
+  // ---- IVF degenerate inputs: an empty query set answers no rows (the
+  // same (vec_id, cos) schema), and zero coarse cells reach no list ----
+
+  private def annArgs = {
+    val e = Tables.embeddings(spark, TestSpark.sfDir)
+    val n = e.count()
+    val nC = AnnSearch.autoCentroids(n)
+    (e, e.filter(lit(false)).select($"embedding".as("qv")), n, nC,
+      AnnSearch.autoCoarse(nC))
+  }
+
+  test("IVF serving: an empty query set returns no rows, not an error") {
+    val (e, noQuery, n, nC, nG) = annArgs
+    val got = AnnSearch.ivfTopK(e, noQuery, 5, nCentroids = nC, nProbe = 2,
+      nCoarse = nG, trainN = AnnSearch.autoTrainN(n, nC), gProbe = 2)
+    assert(got.columns.toSeq == Seq("vec_id", "cos"))
+    assert(got.collect().isEmpty)
+  }
+
+  test("IVF-PQ: an empty query set returns no rows, not an error") {
+    val (e, noQuery, n, nC, nG) = annArgs
+    val got = AnnSearch.ivfPqTopK(e, noQuery, 5, nCentroids = nC, nProbe = 2,
+      nCoarse = nG, trainN = AnnSearch.autoTrainN(n, nC), gProbe = 2)
+    assert(got.columns.toSeq == Seq("vec_id", "cos"))
+    assert(got.collect().isEmpty)
+  }
+
+  test("zero coarse centroids map no fine centroid to a cell") {
+    val rows = IndexedSeq(
+      AnnSearch.CentRow(1L, Array(1.0, 0.0), 1.0),
+      AnnSearch.CentRow(2L, Array(0.0, 1.0), 1.0))
+    val (coarse, f2g) = AnnSearch.coarseFineLocal(rows, nCoarse = 0)
+    assert(coarse.isEmpty && f2g.isEmpty, s"fine→coarse map: $f2g")
+  }
+
+  test("schema cache keeps one entry per path across an in-place rebuild") {
+    val d = java.nio.file.Files.createTempDirectory("graft_sc").toString
+    Seq((1L, "a")).toDF("x", "y").write.parquet(s"$d/t.parquet")
+    val entries = Tables.schemaCache.size()
+    assert(Tables.table(spark, d, "t").columns.toSeq == Seq("x", "y"))
+    Thread.sleep(15) // the rebuilt file gets a later mtime
+    Seq((1L, 2.0, "a")).toDF("x", "z", "y").write.mode("overwrite")
+      .parquet(s"$d/t.parquet")
+    assert(Tables.table(spark, d, "t").columns.toSeq == Seq("x", "z", "y"))
+    assert(Tables.schemaCache.size() == entries + 1,
+      "a superseded generation of the file stayed cached")
+  }
 }

@@ -537,6 +537,113 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(state(dir, c.version).contains(3001L))
   }
 
+  // ---- metadata write skew: a data commit validated its schema and
+  // constraints at its read version, so a rebase past a schema or
+  // constraint change must abort, not publish ----
+
+  private def hfs = new org.apache.hadoop.fs.Path("/")
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def attemptDirs(dir: String): Set[String] =
+    hfs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/data"))
+      .map(_.getPath.getName).toSet
+
+  private def assertAborted(dir: String, version: Int,
+                            before: Set[String])(commit: => Any): Unit = {
+    intercept[java.util.ConcurrentModificationException](commit)
+    assert(VersionedTable.latestVersion(spark, dir) == version,
+      "the stale commit published a version")
+    assert(attemptDirs(dir) == before,
+      "the aborted attempt's files must be deleted")
+  }
+
+  test("stale blind append aborts after a concurrent ADD CONSTRAINT") {
+    val dir = newTable()
+    val before = attemptDirs(dir)
+    val adds = VersionedTable.writeCommitFiles(spark, dir, 1,
+      Seq((5001L, -1L, "p0")).toDF("k", "v", "p"), "p", None)
+    VersionedTable.addConstraintCommit(spark, dir, "nonneg", "v >= 0") // v1
+    assertAborted(dir, 1, before) {
+      VersionedTable.commitAttempt(spark, dir, 0, adds, Nil, Nil,
+        None, "append", None)
+    }
+    assert(VersionedTable.read(spark, dir, 1).filter($"v" < 0).isEmpty)
+  }
+
+  test("stale partition rewrite aborts after a concurrent ADD CONSTRAINT") {
+    val dir = newTable()
+    val rewritten = VersionedTable.read(spark, dir, 0, Some(Set("p1")))
+      .withColumn("v", -$"v" - 1L)
+    VersionedTable.addConstraintCommit(spark, dir, "nonneg", "v >= 0") // v1
+    val before = attemptDirs(dir)
+    assertAborted(dir, 1, before) {
+      VersionedTable.rewritePartitionsCommit(spark, dir, Set("p1"), rewritten,
+        "p", readVersion = 0)
+    }
+    assert(VersionedTable.read(spark, dir, 1).filter($"v" < 0).isEmpty)
+  }
+
+  test("stale append aborts after a concurrent DROP COLUMNS") {
+    val dir = newTable()
+    val before = attemptDirs(dir)
+    val adds = VersionedTable.writeCommitFiles(spark, dir, 1,
+      Seq((5002L, 7L, "p0")).toDF("k", "v", "p"), "p", None)
+    VersionedTable.dropColumnsCommit(spark, dir, Seq("v"), "p") // v1
+    assertAborted(dir, 1, before) {
+      VersionedTable.commitAttempt(spark, dir, 0, adds, Nil, Nil,
+        None, "append", None)
+    }
+    assert(VersionedTable.read(spark, dir, 1, mergeSchema = true)
+      .columns.toSet == Set("k", "p"), "the dropped column resurfaced")
+  }
+
+  test("stale metadata commit rebases past a noop, aborts on any data") {
+    val dir = newTable()
+    def check(name: String, ex: String) = VersionedTable.LogEntry(-1,
+      "constraint", s"_constraint/$name", "", None, None, Some(ex))
+    VersionedTable.mergeCommit(spark, dir, changes(Seq.empty), Seq("k"),
+      "p")                                                    // v1: noop
+    val c = VersionedTable.commitAttempt(spark, dir, 0, Nil, Nil, Nil, None,
+      "add_constraint", None, evolves = Seq(check("nonneg", "v >= 0")))
+    assert(c.version == 2)
+    VersionedTable.appendCommit(spark, dir,
+      Seq((5003L, 5000L, "p2")).toDF("k", "v", "p"), "p")     // v3
+    val before = attemptDirs(dir)
+    // validated against v2, where every v is below 1000
+    assertAborted(dir, 3, before) {
+      VersionedTable.commitAttempt(spark, dir, 2, Nil, Nil, Nil, None,
+        "add_constraint", None, evolves = Seq(check("small", "v < 1000")))
+    }
+    assert(VersionedTable.constraintsAt(spark, dir, 3).keySet == Set("nonneg"))
+  }
+
+  test("vacuum reaps the temp manifest and checkpoint a crashed writer left") {
+    val dir = newTable()
+    VersionedTable.mergeCommit(spark, dir,
+      changes(Seq((1L, 111L, "p0", "U"))), Seq("k"), "p")     // v1
+    val committed = state(dir, 1)
+    // a writer that died between writing its temp manifest and claiming
+    // it, and one that died mid-checkpoint before its rename, each with
+    // the .crc sidecar the local filesystem writes
+    val leftovers = Seq("_logtmp_dead0001.parquet", "_ckpttmp_dead0002.parquet")
+    val sidecars = leftovers.map(n => s".$n.crc")
+    val manifest = java.nio.file.Paths.get(s"$dir/_log/v00001.parquet")
+    (leftovers ++ sidecars).foreach(n =>
+      Files.copy(manifest, java.nio.file.Paths.get(s"$dir/$n")))
+    assert(VersionedTable.latestVersion(spark, dir) == 1)
+    assert(state(dir, 1) == committed)
+    // newer than the latest manifest: possibly in flight, so kept
+    assert(VersionedTable.vacuum(spark, dir, retainLast = 2).isEmpty)
+    Thread.sleep(15)
+    VersionedTable.mergeCommit(spark, dir, changes(Seq.empty), Seq("k"),
+      "p")                                                    // v2
+    val deleted = VersionedTable.vacuum(spark, dir, retainLast = 2)
+    assert(leftovers.forall(deleted.contains), s"leftovers kept: $deleted")
+    assert((leftovers ++ sidecars).forall(n =>
+      !Files.exists(java.nio.file.Paths.get(s"$dir/$n"))))
+    assert(state(dir, 2) == committed)
+  }
+
   // ---- merge-on-read deletion vectors ----
 
   test("deleteCommit writes tombstones, not partition rewrites") {
