@@ -2,12 +2,15 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 /** Driver-side parquet IO for the versioned-table LOG (`_log/vNNNNN.parquet`,
@@ -101,22 +104,37 @@ private[graft] object LogCodec {
     } finally writer.close()
   }
 
-  /** Reads every row of the given manifest/checkpoint files on the driver.
+  /** Opens one parquet file with read options built from `conf`, the
+    * caller's configuration. parquet-mr's default options (and
+    * `ParquetReader.builder(…, path)`) build a fresh Hadoop
+    * `Configuration` per open and re-parse its XML defaults, which cost
+    * more than the read of a small manifest or footer itself; every
+    * driver-side open in this object goes through here. */
+  private def open(conf: Configuration, file: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
+
+  /** Reads every row of the given manifest/checkpoint files on the driver,
+    * each opened through [[open]] (read options from `conf`, never a
+    * fresh Hadoop configuration) and decoded row group by row group.
     * Schema comes from each file's own footer; columns added over the
     * engine's history (`fschema`, `nrec`, `scol`, `mstats`, `ts`, `op`)
     * read as None when a file predates them. */
   def read(conf: Configuration, files: Seq[Path]): Seq[LogRow] = {
     def readOne(p: Path): Seq[LogRow] = {
       val out = Seq.newBuilder[LogRow]
-      val reader = ParquetReader.builder(new GroupReadSupport(), p)
-        .withConf(conf).build()
+      val rd = open(conf, p)
       try {
-        var g: Group = reader.read()
-        while (g != null) {
-          out += rowOf(g)
-          g = reader.read()
+        val schema = rd.getFooter.getFileMetaData.getSchema
+        val io = new ColumnIOFactory().getColumnIO(schema)
+        var pages = rd.readNextRowGroup()
+        while (pages != null) {
+          val records = io.getRecordReader(pages, new GroupRecordConverter(schema))
+          var i = 0L
+          while (i < pages.getRowCount) { out += rowOf(records.read()); i += 1 }
+          pages = rd.readNextRowGroup()
         }
-      } finally reader.close()
+      } finally rd.close()
       out.result()
     }
     if (files.sizeIs <= 1) files.flatMap(readOne)
@@ -166,7 +184,7 @@ private[graft] object LogCodec {
 
   def footerStats(conf: Configuration, file: Path,
                   statCols: Seq[String]): FooterStats = {
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val rd = open(conf, file)
     try {
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
       import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -234,7 +252,7 @@ private[graft] object LogCodec {
 
   /** Exact row count of one parquet file from its footer (no Spark job). */
   def footerRowCount(conf: Configuration, file: Path): Long = {
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val rd = open(conf, file)
     try rd.getRecordCount
     finally rd.close()
   }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.ConcurrentModificationException
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
@@ -218,6 +218,23 @@ object VersionedTable {
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Every file under `dir`, recursively, in the order a recursive
+    * `FileSystem.listFiles` returns them, from plain `listStatus` calls.
+    * `listFiles` wraps each entry in a `LocatedFileStatus`, which reads
+    * the entry's permission; the local filesystem without native Hadoop
+    * forks one `ls -ld` process per entry for that. A `listStatus` entry
+    * loads its permission only when asked, and no caller asks. The
+    * checksummed local filesystem's `listStatus` hides `.crc` sidecars,
+    * exactly as its `listFiles` does. */
+  private def listFilesRecursive(f: FileSystem, dir: Path): Seq[FileStatus] = {
+    val out = Seq.newBuilder[FileStatus]
+    def walk(d: Path): Unit = f.listStatus(d).foreach { st =>
+      if (st.isDirectory) walk(st.getPath) else out += st
+    }
+    walk(dir)
+    out.result()
+  }
+
   private def logDir(path: String) = s"$path/_log"
 
   private def ckptDir(path: String) = s"$path/_ckpt"
@@ -393,9 +410,9 @@ object VersionedTable {
     LogCodec.write(conf, tmp, rows, withTsOp = false)
     val dest = new Path(f"${ckptDir(path)}/c$version%05d.parquet")
     f.mkdirs(dest.getParent)
+    // the checksummed local filesystem renames the `.crc` sidecar with it
     if (!f.rename(tmp, dest))
       throw new IllegalStateException(s"checkpoint rename failed: $dest")
-    f.delete(new Path(tmp.getParent, s".${tmp.getName}.crc"), false)
   }
 
   /** First live data file at the greatest version ≤ `version` with a
@@ -633,9 +650,13 @@ object VersionedTable {
     * to collect per-file column metrics for the manifest; a native writer
     * would emit these during the write, but Spark's writer API does not
     * surface per-task file stats, so the read-back is the honest path.
-    * Relative paths derive from locating the attempt dir's unique name in
-    * the absolute path — never by pattern-matching a literal `data/`,
-    * which would misfire on table roots that themselves contain `data/`. */
+    * The written files are found by one recursive `listStatus` walk of
+    * the attempt dir ([[listFilesRecursive]]: `.crc` sidecars hidden, no
+    * per-entry permission read), and each entry records the listed length
+    * and mtime. Relative paths are the attempt dir's relative name plus
+    * one directory per partition column — never derived by
+    * pattern-matching a literal `data/`, which would misfire on table
+    * roots that themselves contain `data/`. */
   private[graft] def writeCommitFiles(spark: SparkSession, path: String,
                                       version: Int, df: DataFrame,
                                       partitionCol: String,
@@ -692,13 +713,9 @@ object VersionedTable {
         pdirCols :+ pmod(hash(df.columns.map(col): _*), lit(fileSplits)): _*)
     }
     keyed.write.mode("errorifexists").partitionBy(pdirs: _*).parquet(commitDir)
-    val f = fs(spark, path)
-    val it = f.listFiles(new Path(commitDir), true)
-    val out = Seq.newBuilder[(String, String, Long, Long)]
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath
-      if (p.getName.endsWith(".parquet")) {
+    val listedFull = listFilesRecursive(fs(spark, path), new Path(commitDir))
+      .collect { case st if st.getPath.getName.endsWith(".parquet") =>
+        val p = st.getPath
         // walk up one directory level per partition column; the manifest's
         // part key pairs the REAL column names with the (escaped) values
         val dirNames = new Array[String](pCols.size)
@@ -711,11 +728,9 @@ object VersionedTable {
               dirNames(0).stripPrefix(PartDir + "="))
           else pCols.zip(dirNames).map { case (c, dn) =>
             s"$c=${dn.substring(dn.indexOf('=') + 1)}" }.mkString("/")
-        out += ((s"$commitRel/${dirNames.mkString("/")}/${p.getName}", partKey,
-          st.getLen, st.getModificationTime))
+        (s"$commitRel/${dirNames.mkString("/")}/${p.getName}", partKey,
+          st.getLen, st.getModificationTime)
       }
-    }
-    val listedFull = out.result()
     val listed = listedFull.map { case (rel, part, _, _) => (rel, part) }
     // One read-back pass records per-file metrics for the manifest: row
     // COUNT always (the scan projects no data columns, so the vectorized
@@ -912,9 +927,8 @@ object VersionedTable {
     val won =
       if (f.exists(dest)) false // cheap pre-check; the claim below decides
       else claimIfAbsent(spark, f, tmp, dest)
+    // the checksummed local filesystem deletes the `.crc` sidecar with it
     f.delete(tmp, false)
-    // parquet-mr leaves a .crc sidecar next to the temp file on local fs
-    f.delete(new Path(tmp.getParent, s".${tmp.getName}.crc"), false)
     won
   }
 
@@ -1066,19 +1080,16 @@ object VersionedTable {
     val pCols = partColsOf(partitionCol)
     val f = fs(spark, path)
     val rootPrefix = new Path(path).toUri.getPath + "/"
-    val it = f.listFiles(new Path(path), true)
-    val listed = Seq.newBuilder[(String, String, Long, Long)]
-    while (it.hasNext) {
-      val lst = it.next()
+    val files = listFilesRecursive(f, new Path(path)).flatMap { lst =>
       val p = lst.getPath
-      val rel0 = p.toUri.getPath.stripPrefix(rootPrefix)
+      val rel = p.toUri.getPath.stripPrefix(rootPrefix)
       // skip hidden/underscore paths (any segment) — Spark's own reader
       // ignores them, and a leftover _temporary/.staging file from a
       // crashed write must not block adopting an otherwise readable dir
-      val hidden = rel0.split('/').exists(s =>
+      val hidden = rel.split('/').exists(s =>
         s.startsWith("_") || s.startsWith("."))
-      if (p.getName.endsWith(".parquet") && !hidden) {
-        val rel = rel0
+      if (!p.getName.endsWith(".parquet") || hidden) None
+      else {
         val segs = rel.split('/')
         require(segs.length == pCols.size + 1,
           s"convert: '$rel' is not a ${pCols.size}-level key=value layout " +
@@ -1089,11 +1100,9 @@ object VersionedTable {
             s"convert: directory '$seg' does not match partition column '$c'")
           ExternalCatalogUtils.unescapePathName(seg.substring(i + 1))
         }
-        listed += ((rel, partKeyOf(pCols, vals),
-          lst.getLen, lst.getModificationTime))
+        Some((rel, partKeyOf(pCols, vals), lst.getLen, lst.getModificationTime))
       }
     }
-    val files = listed.result()
     require(files.nonEmpty, s"convert: no parquet files under $path")
     // one directory read: the authoritative schema (partition columns
     // included, typed by Spark's layout inference — recorded in the log
@@ -1243,10 +1252,11 @@ object VersionedTable {
                    opName: String = "append"): Commit = {
     val cur = latestVersion(spark, path)
     require(cur >= 0, s"appendCommit: $path has no version 0 — create() first")
-    requireNoResurface(spark, path, cur, df.columns.toSeq, "appendCommit")
+    val snap = replayAll(spark, path, cur)
+    requireNoResurface(spark, snap, df.columns.toSeq, "appendCommit")
     val adds = writeCommitFiles(spark, path, cur + 1, df, partitionCol, statsCol,
       fileSplits)
-    requireConstraintsHold(spark, path, cur, adds)
+    requireConstraintsHold(spark, path, snap, adds)
     commitAttempt(spark, path, cur, adds, Nil, Nil, None, opName, ts)
   }
 
@@ -1256,14 +1266,15 @@ object VersionedTable {
     * would merge the name back into the union schema and the old files'
     * values would resurface — the write-path twin of
     * [[addColumnsCommit]]'s re-add guard. No-ops on tables with no
-    * evolve entry (nothing was ever dropped), so plain appends pay one
-    * log replay only after a schema lifecycle began; on a pre-
-    * schema-recording log the effective schema is unknowable and the
-    * legacy footer-union behavior stands. */
-  private def requireNoResurface(spark: SparkSession, path: String, cur: Int,
+    * evolve entry (nothing was ever dropped); on a pre-schema-recording
+    * log the effective schema is unknowable and the legacy footer-union
+    * behavior stands. `snap` is the verb's one replay of its read
+    * version ([[replayAll]]). */
+  private def requireNoResurface(spark: SparkSession,
+                                 snap: (Seq[LogEntry], Seq[LogEntry]),
                                  writeCols: Seq[String],
                                  what: String): Unit = {
-    val (live, evolves) = replayAll(spark, path, cur)
+    val (live, evolves) = snap
     if (evolves.isEmpty) return
     effectiveSchemaOf(evolves, live.filter(_.action == "add")).foreach { eff =>
       val resolver = spark.sessionState.conf.resolver
@@ -1299,10 +1310,11 @@ object VersionedTable {
                       ts: Option[Long] = None, fileSplits: Int = 1): Commit = {
     val cur = latestVersion(spark, path)
     require(cur >= 0, s"overwriteCommit: $path has no version 0 — create() first")
-    val removes = liveEntries(spark, path, cur).map(e => (e.file, e.part))
+    val snap = replayAll(spark, path, cur)
+    val removes = snap._1.map(e => (e.file, e.part))
     val adds = writeCommitFiles(spark, path, cur + 1, df, partitionCol,
       statsCol, fileSplits)
-    requireConstraintsHold(spark, path, cur, adds)
+    requireConstraintsHold(spark, path, snap, adds)
     commitAttempt(spark, path, cur, adds, Nil, removes,
       Some((removes.map(_._2) ++ adds.map(_.part)).toSet), "overwrite", ts)
   }
@@ -1331,8 +1343,8 @@ object VersionedTable {
     // the merge rewrite covers only the AFFECTED partitions, so a change
     // batch re-carrying a dropped name would resurface the other
     // partitions' old bytes — same guard as append
-    requireNoResurface(spark, path, cur, changes.columns.toSeq,
-      "mergeCommit")
+    val snap = replayAll(spark, path, cur)
+    requireNoResurface(spark, snap, changes.columns.toSeq, "mergeCommit")
     val affected = affectedPartsOf(changes, partColsOf(partitionCol),
       "mergeCommit")
     if (affected.isEmpty) {
@@ -1345,18 +1357,19 @@ object VersionedTable {
         Some(Set.empty), "merge", ts)
     }
     val affectedSet = affected.toSet
-    val removes = liveEntries(spark, path, cur)
+    val removes = snap._1
       .collect { case e if affectedSet(e.part) => (e.file, e.part) }
     // mergeSchema: the affected slice may span commits on both sides of a
     // schema widening — without it the reader adopts one file's schema and
     // silently DROPS the late column from the other files' rows
-    val target = read(spark, path, cur, Some(affectedSet), mergeSchema = true)
+    val target = read(spark, path, cur, Some(affectedSet), mergeSchema = true,
+      preEntries = Some(snap._1 ++ snap._2))
     val merged = MergeSink.mergeDataflow(
       target, changes, keyCols, partitionCol, opCol, seqCol, None)
     try {
       val adds = writeCommitFiles(spark, path, cur + 1, merged, partitionCol,
         statsCol)
-      requireConstraintsHold(spark, path, cur, adds)
+      requireConstraintsHold(spark, path, snap, adds)
       commitAttempt(spark, path, cur, adds, Nil, removes,
         Some(affectedSet), "merge", ts)
     } finally MergeSink.dropCheckpoint(merged)
@@ -1424,7 +1437,8 @@ object VersionedTable {
     if (parts.isEmpty)
       return commitAttempt(spark, path, cur, Nil, Nil, Nil,
         Some(Set.empty), opName, ts)
-    val removes = liveEntries(spark, path, cur)
+    val snap = replayAll(spark, path, cur)
+    val removes = snap._1
       .collect { case e if parts(e.part) => (e.file, e.part) }
     val adds = writeCommitFiles(spark, path, cur + 1, rewritten, partitionCol,
       statsCol)
@@ -1437,7 +1451,7 @@ object VersionedTable {
     }
     // UPDATE can assign a violating value — the COW rewrite enforces CHECK
     // constraints like any other write of new content
-    requireConstraintsHold(spark, path, cur, adds)
+    requireConstraintsHold(spark, path, snap, adds)
     commitAttempt(spark, path, cur, adds, Nil, removes, Some(parts), opName, ts)
   }
 
@@ -1593,8 +1607,11 @@ object VersionedTable {
     * the drop marker. */
   def constraintsAt(spark: SparkSession, path: String,
                     version: Int): Map[String, String] =
-    replayEntries(spark, path, version)
-      .filter(_.action == "constraint")
+    constraintsOf(replayAll(spark, path, version)._2)
+
+  /** [[constraintsAt]] from an already replayed metadata channel. */
+  private def constraintsOf(meta: Seq[LogEntry]): Map[String, String] =
+    meta.filter(_.action == "constraint")
       .groupBy(_.file).values
       .map(_.maxBy(_.version))
       .collect { case e if e.fschema.nonEmpty =>
@@ -1695,13 +1712,15 @@ object VersionedTable {
     * nondeterministic source. Files are read under the table's effective
     * schema widened by the batch's own, so a constraint referencing a
     * column this batch omits sees NULL — which passes, per SQL CHECK.
-    * On violation the attempt files are cleaned and the write aborts. */
+    * On violation the attempt files are cleaned and the write aborts.
+    * `snap` is the verb's one replay of its read version ([[replayAll]]):
+    * the constraint set and the effective schema both come from it. */
   private def requireConstraintsHold(spark: SparkSession, path: String,
-                                     cur: Int, adds: Seq[LogEntry]): Unit = {
-    if (adds.isEmpty) return
-    val cons = constraintsAt(spark, path, cur)
-    if (cons.isEmpty) return
-    val (live, meta) = replayAll(spark, path, cur)
+                                     snap: (Seq[LogEntry], Seq[LogEntry]),
+                                     adds: Seq[LogEntry]): Unit = {
+    val (live, meta) = snap
+    val cons = constraintsOf(meta)
+    if (adds.isEmpty || cons.isEmpty) return
     val eff = effectiveSchemaOf(meta, live.filter(_.action == "add"))
       .map(s => LogEntry(-1, "add", "", "", None, None, Some(s.json)))
     val schema = unionSchemaOf(eff.toSeq ++ adds)
@@ -2012,10 +2031,15 @@ object VersionedTable {
   /** Change data feed: row-level diffs of versions in [fromVersion,
     * toVersion], with `_commit_version` and `_change_type` (insert|delete)
     * columns. Derivation per version, from the manifest file sets:
-    *   - COW/append/optimize commits: inserts = added rows EXCEPT ALL
-    *     removed rows; deletes = removed EXCEPT ALL added (unchanged rows
-    *     net out, an optimize nets to zero; the shuffle is bounded by the
-    *     commit's own file sets, the same order as the commit itself);
+    *   - COW/append/optimize commits: one signed aggregation. The added
+    *     rows tagged +1 and the removed rows tagged −1 are unioned and
+    *     grouped by every column; a row whose net n is not 0 is emitted
+    *     |n| times, as an insert when n > 0 and a delete when n < 0. That
+    *     is exactly the multiset result of `added EXCEPT ALL removed`
+    *     (inserts) and `removed EXCEPT ALL added` (deletes), with NULLs,
+    *     NaN and −0.0 grouped as those do, from one scan of each side
+    *     and one shuffle. Unchanged rows net out, an optimize nets to
+    *     zero, and the shuffle is bounded by the commit's own file sets;
     *   - tombstone (deletion-vector) commits: deletes = the PRIOR snapshot
     *     semi-joined to the new tombstone keys;
     *   - tombstone retirements inside a rewrite are metadata-only: a
@@ -2106,8 +2130,14 @@ object VersionedTable {
           case (None, Some(r)) => Seq(tag(r, v, "delete"))
           case (Some(a0), Some(r0)) =>
             val (a, r) = conform(a0, r0)
-            Seq(tag(a.exceptAll(r), v, "insert"),
-              tag(r.exceptAll(a), v, "delete"))
+            val (n, cols) = ("__vt_net", a.columns.toSeq.map(col))
+            val net = a.withColumn(n, lit(1L)).union(r.withColumn(n, lit(-1L)))
+              .groupBy(cols: _*).agg(sum(n).as(n)).filter(col(n) =!= 0)
+            Seq(net.select(lit(v).as("_commit_version") +:
+              when(col(n) > 0, "insert").otherwise("delete")
+                .as("_change_type") +: cols :+
+              explode(array_repeat(lit(true), abs(col(n)).cast("int")))
+                .as(n): _*).drop(n))
         }
       }
     }
@@ -2191,13 +2221,10 @@ object VersionedTable {
         if (top.getModificationTime < cutoff) {
           f.delete(top.getPath, false); deleted += n
         }
-      } else if (top.isDirectory) {
-        val it = f.listFiles(top.getPath, true)
-        while (it.hasNext) {
-          val st = it.next()
-          consider(st.getPath, st.getModificationTime)
-        }
-      } else consider(top.getPath, top.getModificationTime)
+      } else if (top.isDirectory)
+        listFilesRecursive(f, top.getPath).foreach(st =>
+          consider(st.getPath, st.getModificationTime))
+      else consider(top.getPath, top.getModificationTime)
     }
     deleted.result()
   }

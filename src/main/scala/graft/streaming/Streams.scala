@@ -147,6 +147,7 @@ object Streams {
     * storage, not to the driver. */
   private def runToParquet(s: SparkSession, df: DataFrame, name: String,
                            mode: String): DataFrame = {
+    requireNoWatermarkAppendAgg(df, name, mode)
     val dir = s"${graft.fixtureRoot}/stream_sink_$name"
     // Clear the PREVIOUS run's sink before starting: a run that yields
     // zero microbatches (or dies before its first batch) writes nothing,
@@ -193,6 +194,25 @@ object Streams {
     prior
   }
 
+  /** Refuses what [[noDataBatchesOff]] would silently break: an
+    * append-mode aggregation over an event-time watermark emits a window
+    * only once the watermark passes its end, and with no trailing no-data
+    * batch the watermark never advances past the last data batch, so the
+    * final windows would never be emitted. */
+  private def requireNoWatermarkAppendAgg(df: DataFrame, name: String,
+                                          mode: String): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
+      EventTimeWatermark}
+    if (mode.equalsIgnoreCase("append")) require(
+      !df.queryExecution.analyzed.exists {
+        case a: Aggregate => a.child.exists(_.isInstanceOf[EventTimeWatermark])
+        case _ => false
+      },
+      s"stream $name: an append-mode aggregation over an event-time " +
+      "watermark needs the trailing no-data microbatch to emit its final " +
+      "windows, which these helpers skip; run it in complete or update mode")
+  }
+
   private def restoreNoDataBatches(s: SparkSession,
                                    prior: Option[String]): Unit = {
     val k = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -202,8 +222,9 @@ object Streams {
     }
   }
 
-  private def runToMemory(s: SparkSession, df: DataFrame, name: String,
-                          mode: String): DataFrame = {
+  private[graft] def runToMemory(s: SparkSession, df: DataFrame,
+                                 name: String, mode: String): DataFrame = {
+    requireNoWatermarkAppendAgg(df, name, mode)
     // State-shard count sized by readEvents (see above); queries build
     // their stream via readEvents immediately before running it here, and
     // the harness executes queries sequentially, so the handoff is safe.

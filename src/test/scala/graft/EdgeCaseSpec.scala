@@ -238,4 +238,19 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(Tables.schemaCache.size() == entries + 1,
       "a superseded generation of the file stayed cached")
   }
+
+  test("stream helpers refuse an append-mode aggregation over a watermark") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx = spark.sqlContext
+    val mem = MemoryStream[(Long, Long)]
+    mem.addData((0L, 1L), (30L, 2L), (120L, 3L))
+    val agg = mem.toDF()
+      .select(timestamp_seconds($"_1").as("t"), $"_2".as("v"))
+      .withWatermark("t", "1 minute")
+      .groupBy(window($"t", "1 minute")).agg(sum($"v").as("v"))
+    val e = intercept[IllegalArgumentException](
+      graft.streaming.Streams.runToMemory(spark, agg,
+        "graft_edge_wm_append", "append"))
+    assert(e.getMessage.contains("watermark"), e.getMessage)
+  }
 }

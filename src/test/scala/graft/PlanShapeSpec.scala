@@ -411,4 +411,19 @@ class PlanShapeSpec extends AnyFunSuite {
     // the rerank's dot product must be the codegen DotFold path
     assert(phys.contains("dotfold"), "rerank must use the codegen cosine")
   }
+
+  test("a copy-on-write change-feed version plans one shuffle, not two") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdf_plan")
+      .toString + "/t"
+    graft.sources.VersionedTable.create(spark, dir,
+      Seq((1L, 10L, "a"), (1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "v", "p"),
+      "p")
+    val c = graft.sources.VersionedTable.rewritePartitionsCommit(spark, dir,
+      Set("a"), Seq((1L, 11L, "a")).toDF("k", "v", "p"), "p")
+    val p = graft.sources.VersionedTable.changes(spark, dir, c.version,
+      c.version).queryExecution.executedPlan.toString
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+    assert(exchanges == 1, p)
+  }
 }

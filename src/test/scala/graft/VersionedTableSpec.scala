@@ -644,6 +644,59 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(state(dir, 2) == committed)
   }
 
+  test("a commit and a checkpoint leave no temp-manifest .crc sidecar") {
+    val dir = newTable()
+    VersionedTable.mergeCommit(spark, dir,
+      changes(Seq((1L, 111L, "p0", "U"))), Seq("k"), "p")     // v1
+    VersionedTable.checkpoint(spark, dir, 1)
+    val left = new java.io.File(dir).list().toSeq.filter(n =>
+      n.startsWith("._logtmp_") || n.startsWith("._ckpttmp_"))
+    assert(left.isEmpty, s"sidecars left at the table root: $left")
+    assert(state(dir, 1)(1L) == 111L)
+  }
+
+  test("changes(): a copy-on-write version equals the two-EXCEPT-ALL diff") {
+    val dir = Files.createTempDirectory("graft_vt").toString + "/t"
+    val nan = Double.NaN
+    val before = Seq[(Long, java.lang.Double, String)](
+      (1L, 1.0, "a"), (1L, 1.0, "a"), (1L, 1.0, "a"), (2L, null, "a"),
+      (2L, null, "a"), (3L, nan, "a"), (4L, -0.0, "a"), (5L, 5.0, "a"),
+      (6L, 6.0, "b")).toDF("k", "d", "p")
+    VersionedTable.create(spark, dir, before, "p")                 // v0
+    // v1 widens the schema by `e`, so v0's files predate the widening
+    VersionedTable.appendCommit(spark, dir,
+      Seq((7L, 7.0, "b", 70L)).toDF("k", "d", "p", "e"), "p")
+    val after = Seq[(Long, java.lang.Double, String, java.lang.Long)](
+      (1L, 1.0, "a", null), (2L, null, "a", null), (2L, null, "a", null),
+      (3L, nan, "a", null), (3L, nan, "a", null), (4L, 0.0, "a", null),
+      (5L, 5.0, "a", 50L), (8L, null, "a", 80L)).toDF("k", "d", "p", "e")
+    val c = VersionedTable.rewritePartitionsCommit(spark, dir, Set("a"),
+      after, "p")                                                  // v2
+    val live = (v: Int) => VersionedTable.liveFiles(spark, dir, v).map(_._1)
+    def readFiles(fs: Seq[String]) = spark.read.option("mergeSchema", "true")
+      .parquet(fs.map(f => s"$dir/$f"): _*)
+    val a0 = readFiles(live(2).diff(live(1)))
+    val r0 = readFiles(live(1).diff(live(2)))
+    assert(!r0.columns.contains("e"), "the removed side must predate `e`")
+    val cols = (a0.columns ++ r0.columns).distinct.toSeq
+    def fit(df: org.apache.spark.sql.DataFrame) = df.select(cols.map(c =>
+      if (df.columns.contains(c)) col(c) else lit(null).as(c)): _*)
+    val (a, r) = (fit(a0), fit(r0))
+    def tagged(df: org.apache.spark.sql.DataFrame, ct: String) =
+      df.select(lit(c.version).as("_commit_version") +:
+        lit(ct).as("_change_type") +: cols.map(col): _*)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    val got = VersionedTable.changes(spark, dir, c.version, c.version)
+    val want = tagged(a.exceptAll(r), "insert")
+      .union(tagged(r.exceptAll(a), "delete"))
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(rows(got) == rows(want))
+    // a row held 3x before and 1x after is two deletes
+    assert(got.filter($"k" === 1L).collect().map(_.getAs[String](
+      "_change_type")).toSeq == Seq("delete", "delete"))
+  }
+
   // ---- merge-on-read deletion vectors ----
 
   test("deleteCommit writes tombstones, not partition rewrites") {

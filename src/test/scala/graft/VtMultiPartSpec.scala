@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.sources.VersionedTable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -191,5 +192,62 @@ class VtMultiPartSpec extends AnyFunSuite {
     val got = VersionedTable.read(spark, dir, 0, Some(Set(part)))
       .select("date", "src").head()
     assert(got.getString(0) == "d 1" && got.getString(1) == "a/b")
+  }
+
+  /** Every visible parquet file under `root`, relative to it. */
+  private def parquetFiles(root: String): Seq[java.nio.file.Path] = {
+    val base = java.nio.file.Paths.get(root)
+    val st = Files.walk(base)
+    try {
+      st.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".")
+      }.map(base.relativize).toList
+    } finally st.close()
+  }
+
+  test("commit files of a nested layout enter the manifest with part and size") {
+    val dir = newTable()
+    val onDisk = parquetFiles(dir).filter(_.startsWith("data")).map { rel =>
+      val segs = rel.iterator().asScala.map(_.toString).toSeq
+      val dirs = segs.dropRight(1).takeRight(2)
+      val part = Seq("date", "src").zip(dirs).map { case (c, d) =>
+        s"$c=${d.substring(d.indexOf('=') + 1)}" }.mkString("/")
+      val f = java.nio.file.Paths.get(dir).resolve(rel)
+      (rel.toString, part, Files.size(f),
+        Files.getLastModifiedTime(f).toMillis)
+    }.toSet
+    val logged = VersionedTable.liveEntries(spark, dir, 0)
+      .map(e => (e.file, e.part, e.fsize.get, e.fmtime.get)).toSet
+    assert(onDisk.size == 4 && logged == onDisk, s"$logged vs $onDisk")
+  }
+
+  test("vacuum reaps an orphan in the nested layout") {
+    val dir = newTable()
+    val live = VersionedTable.liveFiles(spark, dir, 0).head._1
+    val orphan = "data/c99999-deadbeef/__vt_p0=d1/__vt_p1=a/orphan.parquet"
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/$orphan").getParent)
+    Files.copy(java.nio.file.Paths.get(s"$dir/$live"),
+      java.nio.file.Paths.get(s"$dir/$orphan"))
+    Thread.sleep(15)
+    VersionedTable.appendCommit(spark, dir,
+      Seq((6L, 60L, "d1", "a")).toDF("k", "v", "date", "src"), "date,src")
+    assert(VersionedTable.vacuum(spark, dir, retainLast = 2) == Seq(orphan))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/$orphan")))
+    assert(VersionedTable.read(spark, dir, 1).count() == 6)
+  }
+
+  test("convert adopts every file of a nested key=value tree") {
+    val dir = Files.createTempDirectory("graft_vtmp_conv").toString + "/t"
+    Seq((1L, "d1", "a"), (2L, "d1", "b"), (3L, "d2", "a"), (4L, "d2", "a"))
+      .toDF("k", "date", "src").repartition(2)
+      .write.partitionBy("date", "src").parquet(dir)
+    val files = parquetFiles(dir).map(_.toString).toSet
+    VersionedTable.convert(spark, dir, "date,src")
+    val live = VersionedTable.liveFiles(spark, dir, 0)
+    assert(live.map(_._1).toSet == files && live.size == files.size)
+    assert(live.map(_._2).toSet ==
+      Set("date=d1/src=a", "date=d1/src=b", "date=d2/src=a"))
+    assert(VersionedTable.read(spark, dir, 0).count() == 4)
   }
 }
