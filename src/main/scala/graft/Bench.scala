@@ -1,49 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
-  /** Opt-in (SPARK_GRAFT_BENCH_SPILL=1) per-query resource accounting for
-    * scale-up runs: accumulates task-level spill bytes and tracks max
-    * per-task peak execution memory via a listener; Bench snapshots the
-    * counters around each query and emits a second JSON line the driver
-    * ignores. */
-  private final class SpillListener extends org.apache.spark.scheduler.SparkListener {
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val peak = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        peak.getAndAccumulate(m.peakExecutionMemory, Math.max(_, _))
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle width defaults to the core count (right for the graded
-    // sf0.1 scale) but must SCALE WITH DATA for scale-up probes: at sf30,
-    // 32 partitions put ~6M lineitem rows in one task's hash map — 100+ GB
-    // of spill on the big joins. Pass SPARK_GRAFT_SHUFFLE_PARTITIONS=128+
-    // there; AQE coalesces small shuffles back down, so over-provisioning
-    // costs little. On a real cluster this is executors × cores × 2-3.
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // Input split size is the OTHER scale knob: a map-side aggregate over
-    // a mostly-unique key (q20's (pk,sk)) gets no reduction, so its hash
-    // map grows with the SPLIT, not the shuffle width — 128 MB splits of
-    // 180M-row lineitem spill ~140 GB at sf30; 32 MB splits fit the map.
-    val maxPartitionBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // Input split size is the scale knob beside the shuffle width (see
+    // GraftSession): a map-side aggregate over a mostly-unique key (q20's
+    // (pk,sk)) gets no reduction, so its hash map grows with the SPLIT,
+    // not the shuffle width — 128 MB splits of 180M-row lineitem spill
+    // ~140 GB at sf30; 32 MB splits fit the map.
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
     // Untimed session warmup: JVM/codegen/shuffle-machinery startup is
     // engine-constant cost, not per-query cost — without this the first
     // query in map order absorbs ~3-5s of it. No table data is cached.
@@ -92,10 +59,8 @@ object Bench {
     // speed) and treat a large calib/calibEnd spread as "this round's
     // normalization is unreliable — compare raw shared keys instead".
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val trackSpill = sys.env.get("SPARK_GRAFT_BENCH_SPILL").contains("1")
-    val listener = new SpillListener
-    if (trackSpill) spark.sparkContext.addSparkListener(listener)
-    val spills = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    // name → "class: message" of the query's first failure
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Between queries, release session-lifetime residue so a 240-query ×
     // reps run measures each plan, not the accumulated weight of everything
     // before it: localCheckpoint'd fixpoint edges (pagerank, cluster_cc)
@@ -122,7 +87,12 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+                 catch { case e: Throwable =>
+                   val why = s"${e.getClass.getName}: ${e.getMessage}"
+                   System.err.println(s"[bench] $name failed: $why")
+                   errors(name) = why
+                   false
+                 }
         val dt = (System.nanoTime() - t0) / 1e9
         // Release on BOTH paths (still untimed): a failed query's
         // leftovers (cached fixpoint RDDs, stream temp views) must not
@@ -130,17 +100,8 @@ object Bench {
         releaseResidue()
         if (ok) dt else -1.0
       }
-      val s0 = listener.spilled.get()
-      if (trackSpill) listener.peak.set(0L)
       val best = (1 to reps).foldLeft(Double.MaxValue) { (acc, _) =>
         if (acc < 0) acc else math.min(acc, once()) // a failure short-circuits
-      }
-      if (trackSpill) {
-        // listener events are async (listenerBus is private[spark]) — a
-        // short drain pause keeps per-query attribution honest enough for
-        // the scale-up report
-        Thread.sleep(300)
-        spills += ((name, listener.spilled.get() - s0, listener.peak.get()))
       }
       name -> best
     }
@@ -156,9 +117,12 @@ object Bench {
     // its JSON parser, which is why BENCH_r{1..4}.json all carry
     // "parsed": null. So the LAST line — the one the tail retains — is a
     // compact contract line whose "queries" map holds only the headline
-    // TPC-H shapes, and the full map travels on this earlier line + file.
+    // TPC-H shapes, and the full map travels on this earlier line + file,
+    // with each failed query's exception under "errors".
+    val errorsJson = errors.map { case (k, v) =>
+      Verify.jsonString(k) + ":" + Verify.jsonString(v) }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total_full","value":$total,"unit":"sec","calib":$calib,"calib_end":$calibEnd,"queries":${toJson(results)},"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":$total,"unit":"sec","calib":$calib,"calib_end":$calibEnd,"queries":${toJson(results)},"errors":$errorsJson,"sf":"$sfDir"}"""
     println(fullLine)
     // Explicit, overridable dump path (CWD depends on how sbt forked us),
     // and a LOUD stderr line on failure — a silently missing dump cost a
@@ -168,12 +132,6 @@ object Bench {
     try java.nio.file.Files.writeString(dumpPath, fullLine + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] failed to write $dumpPath: $e")
-    }
-    if (trackSpill) {
-      val sp = spills.map { case (k, s, p) =>
-        s"\"" + k + "\":[" + s + "," + p + "]"
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"spill_peak","unit":"bytes","queries":$sp,"sf":"$sfDir"}""")
     }
     val headline = results.filter { case (k, _) => k.startsWith("tpch_q") }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")

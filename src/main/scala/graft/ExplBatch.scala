@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for a list of registered queries to files
   * (`<outDir>/<name>_<suffix>.txt`) — the optimization-round evidence trail.
-  * Runs with the same session shape as Bench (extensions included) so SQL-
+  * Runs on Bench's session ([[GraftSession]], extensions included) so SQL-
   * surface queries resolve. */
 object ExplBatch {
   def main(args: Array[String]): Unit = {
@@ -11,12 +10,7 @@ object ExplBatch {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     names.foreach { n =>

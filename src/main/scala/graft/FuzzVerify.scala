@@ -2,29 +2,22 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 
 /** Cross-engine fuzz gate: execute generated shared-dialect SQL
   * (tools/fuzz_gen.py) with spark.sql over the testdata views, dump each
   * result + an oracle_sql.json echoing the same SQL, so
   * tools/check_oracle.py can hash-compare against DuckDB. Catches dialect
-  * or planner divergences the fixed query set doesn't reach.
+  * or planner divergences the fixed query set doesn't reach. The session
+  * carries the full extensions: the band-join fuzz template relies on the
+  * range-join rewrite to stay O(n·c), and DuckDB's IEJoin runs the
+  * identical SQL on the oracle side.
   *
   * Usage: runMain graft.FuzzVerify <sfDir> <sqlTsv> <outDir>
   */
 object FuzzVerify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, sqlTsv, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The band-join fuzz template relies on the rewrite to stay O(n·c);
-    // DuckDB's IEJoin runs the identical SQL on the oracle side.
-    graft.plans.RangeJoinRewrite.install(spark)
+    val spark = GraftSession()
     Seq("orders", "lineitem", "customer").foreach { t =>
       Tables.table(spark, sfDir, t).createOrReplaceTempView(t)
     }
@@ -40,13 +33,7 @@ object FuzzVerify {
         System.err.println(s"[fuzz] $name failed: ${e.getMessage}")
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\t' => "\\t"; case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      entries.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    Verify.writeOracleSql(outDir, entries)
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.functions.AnnSearch
 
 /** Dev diagnostic (not part of the engine surface): prints recall@20 vs the
@@ -10,10 +9,7 @@ import graft.functions.AnnSearch
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     import spark.implicits._
     for (dir <- dirs) {
       val e = Tables.embeddings(spark, dir)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,24 +9,7 @@ object Verify {
       case Array(a, b)    => (a, b, Set.empty[String])
       case Array(a, b, c) => (a, b, c.split(",").toSet)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scale-run knob (same contract as Bench): at sf30 a 32-wide shuffle
-    // puts ~6M-row task working sets on one heap and spills hundreds of GB
-    // — width must scale with data (SCALING.md sf30 probe).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // withExtensions = the documented deployment configuration
-    // (spark.sql.extensions=graft.plans.GraftExtensions): custom SQL
-    // functions, the band-join rewrite, and the graftvt MERGE INTO rule
-    // are session features, not per-query registrations
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -38,21 +20,29 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
+
+  /** `<outDir>/oracle_sql.json`: name → DuckDB SQL, what
+    * tools/check_oracle.py reads. */
+  private[graft] def writeOracleSql(outDir: String,
+                                    sql: Iterable[(String, String)]): Unit =
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      sql.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+        .mkString("{", ",", "}"))
+
+  /** JSON string literal. Escapes backslash, quote and ALL control chars
+    * (<0x20): a tab or CR in builder-authored SQL or an exception message
+    * would otherwise make the reader's json.load fail and silently zero
+    * the round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1,13 +1,13 @@
 package graft.functions
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2-H: scalar-function matrix (string/date/math/json/array/conditional +
   * the posexplode generator). All pure codegen'd built-ins — no UDFs in the
   * hot path. Float-derived values are emitted as micro-scaled BIGINTs
   * (round(x*1e4 or 1e6)) so cross-engine formatting can't drift (rule R2). */
-object Scalars {
+object Scalars extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // H1: string functions.

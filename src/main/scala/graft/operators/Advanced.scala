@@ -1,11 +1,11 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Advanced SQL surface: recursive CTEs (new in Spark 4), sliding ROWS
   * frames, higher-order array functions, ordered string aggregation. */
-object Advanced {
+object Advanced extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // Recursive CTE: derive a 100-day calendar dimension and left-join

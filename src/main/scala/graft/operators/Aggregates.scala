@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * RewriteDistinctAggregates plan; grouping sets / rollup / cube lower to
   * a single Expand + hash aggregate (one shuffle).
   */
-object Aggregates {
+object Aggregates extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // D1: TPC-H Q1-style pricing summary, all-decimal.

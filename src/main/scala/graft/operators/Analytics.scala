@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * here ≡ `//` in DuckDB, verified on negatives in round 1); every query
   * ends in a total order.
   */
-object Analytics {
+object Analytics extends QueryModule {
 
   val queries: Map[String, Q] = Map(
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * dataflow: dedup-last-wins via row_number, delete+insert via anti-join
   * union. Both become MERGE INTO on an ACID table sink.
   */
-object Etl {
+object Etl extends QueryModule {
 
   // 2024-01-10 / 2024-01-20 UTC midnight, epoch-ns (G3 reload window).
   private val T0 = 1704844800000000000L

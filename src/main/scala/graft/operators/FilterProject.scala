@@ -1,12 +1,12 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2-B: projection, derived columns, composite predicates, 3-valued logic.
   * All predicates are plain Catalyst expressions so they push down to the
   * parquet scan (PushedFilters) — at 100 TB these prune row groups. */
-object FilterProject {
+object FilterProject extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // B1: select + derived columns (decimal disc price, string concat key).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * 100 TB the same readers apply unchanged (explicit schema, no infer
   * pass, splittable line-oriented formats).
   */
-object Ingest {
+object Ingest extends QueryModule {
 
   private val csvFixture  = s"${graft.fixtureRoot}/csv_nation"
   private val jsonFixture = s"${graft.fixtureRoot}/json_nation"

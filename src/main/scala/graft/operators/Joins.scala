@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2-C: the join family.
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * is rewritten as equi-join + max aggregation — fully shuffle-parallel,
   * no per-row lookup.
   */
-object Joins {
+object Joins extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // C1: fact-fact inner equi join + aggregate.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (§2-J7 + north-star): media as opaque BINARY
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * the testdata has no real media); the decode/feature-extraction stubs
   * and `mapPartitions` batch shapes live in [[graft.functions.Media]] with
   * unit tests. */
-object Multimodal {
+object Multimodal extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // Binary passthrough: synthesize a 16-byte BLOB per document, carry it

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Training-data pipeline operators beyond the dedup/similarity family:
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * ~n_tokens/stride rows per doc) — embarrassingly parallel at 100 TB, and
   * every output is integer/string so the driver hash-compare is exact.
   */
-object Pipeline {
+object Pipeline extends QueryModule {
 
   import org.apache.spark.sql.{Column, DataFrame}
 

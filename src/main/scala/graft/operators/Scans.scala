@@ -1,12 +1,12 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2-A: scans / sources. Columnar parquet scans with pushdown; the
   * vectorized reader handles everything here including the BIGINT-ns
   * events path (SURVEY §1.2). */
-object Scans {
+object Scans extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // A1: full scan + projection of a dimension table.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import graft.functions.{WPoint, WeightedSumAgg}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * pairwise threshold query is quadratic by nature; its scale path is the
   * LSH bucketing in [[graft.functions.AnnSearch]] (bucket equi-join).
   */
-object SimOps {
+object SimOps extends QueryModule {
 
   /** cosine(a, b) rounded to 1e-6, as a BIGINT micro-score. Runs through
     * the native [[graft.plans.DotFold]] codegen expression — same left

@@ -1,13 +1,13 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2-F: sorts, global top-k, set operations.
   * F2 plans as TakeOrderedAndProject (per-partition top-k + driver merge —
   * no global sort, the only sane shape at 100 TB). Set ops are hash-based
   * distinct shuffles; union-all is a zero-shuffle concatenation. */
-object SortSet {
+object SortSet extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // F1: multi-key sort, mixed direction + explicit nulls ordering.

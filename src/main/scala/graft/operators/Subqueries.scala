@@ -1,12 +1,12 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 
 /** Relational completeness: SQL subquery forms. Catalyst decorrelates these
   * (RewriteCorrelatedScalarSubquery / RewritePredicateSubquery) into the
   * same join shapes as §2-C — registered through `spark.sql` to exercise
   * the parser→analyzer→decorrelation path end-to-end. */
-object Subqueries {
+object Subqueries extends QueryModule {
 
   private def withViews(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     Tables.customer(s, d).createOrReplaceTempView("graft_customer")

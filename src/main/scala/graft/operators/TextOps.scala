@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** §2-J text-analysis + dedup operators for large-scale training-data
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * cartesian product — the LSH structure is exactly what keeps near-dup
   * tractable at 100 TB.
   */
-object TextOps {
+object TextOps extends QueryModule {
 
   /** 32-bit token hash shared with the DuckDB oracle. */
   private def tokInt(c: org.apache.spark.sql.Column) =

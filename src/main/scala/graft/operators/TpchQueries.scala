@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Classic TPC-H composition shapes (Q3/Q5/Q10 adapted to the testdata's
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * one plan, the canonical end-to-end analytics stress of the relational
   * core. Q5 exercises the supplier dimension (local-supplier condition
   * c_nationkey = s_nationkey). */
-object TpchQueries {
+object TpchQueries extends QueryModule {
 
   private def discPrice = (Tables.dec(col("l_extendedprice")) *
     (lit(1) - Tables.dec(col("l_discount")))).cast("decimal(18,6)")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Driver-representation regression probes.
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * All run over the 5-row region dim: negligible cost, deterministic,
   * total ORDER BY on the key.
   */
-object TypeProbes {
+object TypeProbes extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // DECIMAL boundary: exact micro-scaling of a decimal constant and a

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Embedding-vector operators beyond point-query similarity: per-group
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * runs over `groups × dims` rows, independent of corpus row count.
   * Quantization is a pure per-row map — no shuffle at all.
   */
-object VectorOps {
+object VectorOps extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // Cosine similarity between per-label centroid vectors. Centroid

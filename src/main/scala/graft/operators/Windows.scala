@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Scale: one shuffle per distinct partitionBy key set; frames evaluate
   * streaming within each sorted partition.
   */
-object Windows {
+object Windows extends QueryModule {
 
   val queries: Map[String, Q] = Map(
     // E1: rank / dense_rank (value-determined) + row_number (key-broken).

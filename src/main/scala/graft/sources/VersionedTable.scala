@@ -66,7 +66,7 @@ import scala.jdk.CollectionConverters._
   * [[deleteCommit]] writes the delete keys as TOMBSTONE files (manifest
   * action `tomb`) instead of rewriting partitions: a 1-row delete costs one
   * tiny file, not a partition rewrite — the write-amplification fix at
-  * 100 TB (COW rewrites the whole partition; [[VtBench]] prices the gap).
+  * 100 TB (COW rewrites the whole partition).
   * Reads anti-join live tombstones (pruned by partition like data files).
   * Semantics: a live tombstone suppresses its key in the WHOLE snapshot —
   * re-inserting a tombstoned key must go through [[mergeCommit]] (whose
@@ -1381,7 +1381,7 @@ object VersionedTable {
     * the delete identity (they must include `partitionCol`, which scopes
     * tombstone pruning); a snapshot read anti-joins live tombstones on
     * exactly those columns. Write amplification: O(|keys|), not O(rewritten
-    * partitions) — [[VtBench]] prices it against the COW merge. The
+    * partitions), against the whole partition a COW merge rewrites. The
     * tombstones retire when [[mergeCommit]]/[[optimizeCommit]] next rewrite
     * their partitions. */
   def deleteCommit(spark: SparkSession, path: String, keys: DataFrame,

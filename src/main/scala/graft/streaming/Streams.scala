@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Q, Tables}
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,7 +93,7 @@ class CepFunnel extends org.apache.spark.sql.streaming.StatefulProcessor[
   }
 }
 
-object Streams {
+object Streams extends QueryModule {
 
   // One footer probe per sf dir, not per query: 14 streaming queries × 2
   // bench reps would otherwise re-open the same parquet footer 28 times.

@@ -16,17 +16,7 @@ class GraftVtCatalogSpec extends AnyFunSuite {
 
   /** Session WITH GraftExtensions (the deployment configuration) over the
     * shared SparkContext — same recipe as SqlFunctionsSpec. */
-  private lazy val spark: SparkSession = {
-    val orig = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
-    SparkSession.setDefaultSession(orig)
-    SparkSession.setActiveSession(orig)
-    s
-  }
+  private lazy val spark: SparkSession = TestSpark.extensionSession()
 
   private def newTable(prefix: String): String = {
     val dir = Files.createTempDirectory(prefix).toString + "/t"

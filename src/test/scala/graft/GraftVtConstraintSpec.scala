@@ -11,17 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * survival, and the versioned constraint set under time travel. */
 class GraftVtConstraintSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val orig = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
-    SparkSession.setDefaultSession(orig)
-    SparkSession.setActiveSession(orig)
-    s
-  }
+  private lazy val spark: SparkSession = TestSpark.extensionSession()
 
   private def newTable(prefix: String, name: String): String = {
     val dir = Files.createTempDirectory(prefix).toString + "/t"

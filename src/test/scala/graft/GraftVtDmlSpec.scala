@@ -11,17 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * CDF across the DML versions. */
 class GraftVtDmlSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val orig = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
-    SparkSession.setDefaultSession(orig)
-    SparkSession.setActiveSession(orig)
-    s
-  }
+  private lazy val spark: SparkSession = TestSpark.extensionSession()
 
   /** (k, v, p) over partitions p0/p1/p2, registered as catalog `name`. */
   private def newTable(prefix: String, name: String): String = {

@@ -12,17 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * statement→commit/library mapping. */
 class GraftVtMaintenanceSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val orig = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
-    SparkSession.setDefaultSession(orig)
-    SparkSession.setActiveSession(orig)
-    s
-  }
+  private lazy val spark: SparkSession = TestSpark.extensionSession()
 
   /** Fragmented 2-partition table: v0 create + v1/v2 appends — three
     * files per partition. */

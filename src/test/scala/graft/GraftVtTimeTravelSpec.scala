@@ -12,17 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * behavior. */
 class GraftVtTimeTravelSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val orig = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
-    SparkSession.setDefaultSession(orig)
-    SparkSession.setActiveSession(orig)
-    s
-  }
+  private lazy val spark: SparkSession = TestSpark.extensionSession()
 
   /** v0: k=1,2 — v1: +k=11,12 — v2: +k=21,22 (two partitions). */
   private def newTable(prefix: String, name: String): String = {

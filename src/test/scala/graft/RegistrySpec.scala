@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,16 +13,18 @@ class RegistrySpec extends AnyFunSuite {
 
   private val keyRe = """"([a-z0-9_]+)" -> \(\(s, d\)""".r
 
-  private def sourceKeys(): Seq[String] = {
+  /** The text of every main source file. */
+  private def sources(): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assume(Files.isDirectory(root), s"run from the repo root (cwd=${
       Paths.get("").toAbsolutePath})")
     Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .flatMap(p => keyRe.findAllMatchIn(
-        new String(Files.readAllBytes(p))).map(_.group(1)))
-      .toSeq
+      .map(p => new String(Files.readAllBytes(p))).toSeq
   }
+
+  private def sourceKeys(): Seq[String] =
+    sources().flatMap(keyRe.findAllMatchIn(_).map(_.group(1)))
 
   test("no query key is declared twice in the source") {
     val keys = sourceKeys()
@@ -41,5 +43,19 @@ class RegistrySpec extends AnyFunSuite {
     // the driver records a weaker rows-only check for oracle-less queries;
     // this project's policy is every row graded — keep the sets equal
     assert((q -- o).isEmpty, s"queries without oracles: ${(q -- o).mkString(", ")}")
+  }
+
+  test("SparkEntry lists each module once, the benchmark's five included") {
+    val ms = SparkEntry.modules
+    assert(ms.distinct.size == ms.size, ms.map(_.getClass.getSimpleName).toString)
+    // the modules perfbench/Registry.scala reads rows from by name
+    Seq(operators.Etl, operators.Ingest, streaming.Streams,
+        operators.TpchQueries, operators.Joins).foreach { m =>
+      assert(ms.contains(m), s"$m is not in SparkEntry.modules")
+    }
+    // and every module declared in the source is listed
+    val declared = """object (\w+) extends QueryModule""".r
+    val names = sources().flatMap(declared.findAllMatchIn(_).map(_.group(1))).toSet
+    assert(names == ms.map(_.getClass.getSimpleName.stripSuffix("$")).toSet)
   }
 }

@@ -75,132 +75,99 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects the functions at session construction") {
-    import org.apache.spark.sql.SparkSession
-    val orig = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      // fresh session over the same SparkContext, extensions applied at build
-      val ext = SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions())
-        .getOrCreate()
-      assert(ext ne orig, "must be a newly constructed session")
-      val got = ext.sql(
-        "SELECT vec_dot(array(CAST(1.0 AS DOUBLE), 2.0), array(CAST(3.0 AS DOUBLE), 4.0)) AS d")
-        .head().getDouble(0)
-      assert(got == 11.0)
-      val sig = ext.sql(
-        "SELECT minhash_sketch(x, 2) AS sig FROM (VALUES (CAST(5 AS BIGINT))) t(x)")
-        .head().getAs[scala.collection.Seq[Long]](0)
-      assert(sig.length == 2)
-    } finally {
-      SparkSession.setDefaultSession(orig)
-      SparkSession.setActiveSession(orig)
-    }
+    // fresh session over the same SparkContext, extensions applied at build
+    val ext = TestSpark.extensionSession()
+    assert(ext ne spark, "must be a newly constructed session")
+    val got = ext.sql(
+      "SELECT vec_dot(array(CAST(1.0 AS DOUBLE), 2.0), array(CAST(3.0 AS DOUBLE), 4.0)) AS d")
+      .head().getDouble(0)
+    assert(got == 11.0)
+    val sig = ext.sql(
+      "SELECT minhash_sketch(x, 2) AS sig FROM (VALUES (CAST(5 AS BIGINT))) t(x)")
+      .head().getAs[scala.collection.Seq[Long]](0)
+    assert(sig.length == 2)
   }
 
   test("ApproxQuantileRewrite: opt-in sketch rewrite of percentile_disc") {
-    import org.apache.spark.sql.SparkSession
-    val orig = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions())
-        .getOrCreate()
-      val sql = "SELECT o_orderstatus, " +
-        "percentile_disc(0.5) WITHIN GROUP (ORDER BY o_custkey) AS p50 " +
-        "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
-      Tables.orders(ext, TestSpark.sfDir).createOrReplaceTempView("orders")
+    val ext = TestSpark.extensionSession()
+    val sql = "SELECT o_orderstatus, " +
+      "percentile_disc(0.5) WITHIN GROUP (ORDER BY o_custkey) AS p50 " +
+      "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
+    Tables.orders(ext, TestSpark.sfDir).createOrReplaceTempView("orders")
 
-      ext.conf.set("spark.graft.approxQuantile", "false")
-      val exact = ext.sql(sql)
-      assert(!exact.queryExecution.optimizedPlan.toString.contains("quantile_sketch"))
-      val exactRows = exact.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    ext.conf.set("spark.graft.approxQuantile", "false")
+    val exact = ext.sql(sql)
+    assert(!exact.queryExecution.optimizedPlan.toString.contains("quantile_sketch"))
+    val exactRows = exact.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
-      ext.conf.set("spark.graft.approxQuantile", "true")
-      // k above the group sizes at this sfDir ⇒ no compaction ⇒ the sketch
-      // IS exact: same smallest-value-with-cume_dist>=p tie semantics, so
-      // values must match percentile_disc bit-for-bit
-      ext.conf.set("spark.graft.approxQuantile.k", "8192")
-      val approx = ext.sql(sql)
-      val plan = approx.queryExecution.optimizedPlan.toString
-      assert(plan.contains("quantile_sketch") && !plan.contains("percentile_disc"),
-        plan.take(500))
-      approx.collect().foreach { r =>
-        assert(r.getDouble(1) == exactRows(r.getString(0)),
-          s"${r.getString(0)}: sketch ${r.getDouble(1)} != exact ${exactRows(r.getString(0))}")
-      }
-      // out-of-scope shapes keep the exact path: DOUBLE percentile_cont,
-      // reverse ordering, and a non-BIGINT child
-      val cont = ext.sql("SELECT percentile(o_custkey, 0.5) FROM orders")
-      assert(!cont.queryExecution.optimizedPlan.toString.contains("quantile_sketch"))
-      val rev = ext.sql("SELECT percentile_disc(0.5) WITHIN GROUP " +
-        "(ORDER BY o_custkey DESC) FROM orders")
-      assert(!rev.queryExecution.optimizedPlan.toString.contains("quantile_sketch"))
-      val str = ext.sql("SELECT percentile_disc(0.5) WITHIN GROUP " +
-        "(ORDER BY o_orderstatus) FROM orders")
-      assert(!str.queryExecution.optimizedPlan.toString.contains("quantile_sketch"))
-      // and at the default k (compaction active on these group sizes), the
-      // estimate stays within the theorem's rank bound of the exact answer
-      ext.conf.set("spark.graft.approxQuantile.k", "512")
-      val n = Tables.orders(ext, TestSpark.sfDir).count()
-      ext.sql(sql).collect().foreach { r =>
-        val v = r.getDouble(1)
-        val (lo, hi) = (exactRows.values.min, exactRows.values.max)
-        assert(v >= lo * 0.5 && v <= hi * 1.5,
-          s"k=512 estimate $v wildly off exact range [$lo, $hi] (n=$n)")
-      }
-      ext.conf.set("spark.graft.approxQuantile", "false")
-    } finally {
-      SparkSession.setDefaultSession(orig)
-      SparkSession.setActiveSession(orig)
+    ext.conf.set("spark.graft.approxQuantile", "true")
+    // k above the group sizes at this sfDir ⇒ no compaction ⇒ the sketch
+    // IS exact: same smallest-value-with-cume_dist>=p tie semantics, so
+    // values must match percentile_disc bit-for-bit
+    ext.conf.set("spark.graft.approxQuantile.k", "8192")
+    val approx = ext.sql(sql)
+    val plan = approx.queryExecution.optimizedPlan.toString
+    assert(plan.contains("quantile_sketch") && !plan.contains("percentile_disc"),
+      plan.take(500))
+    approx.collect().foreach { r =>
+      assert(r.getDouble(1) == exactRows(r.getString(0)),
+        s"${r.getString(0)}: sketch ${r.getDouble(1)} != exact ${exactRows(r.getString(0))}")
     }
+    // out-of-scope shapes keep the exact path: DOUBLE percentile_cont,
+    // reverse ordering, and a non-BIGINT child
+    val cont = ext.sql("SELECT percentile(o_custkey, 0.5) FROM orders")
+    assert(!cont.queryExecution.optimizedPlan.toString.contains("quantile_sketch"))
+    val rev = ext.sql("SELECT percentile_disc(0.5) WITHIN GROUP " +
+      "(ORDER BY o_custkey DESC) FROM orders")
+    assert(!rev.queryExecution.optimizedPlan.toString.contains("quantile_sketch"))
+    val str = ext.sql("SELECT percentile_disc(0.5) WITHIN GROUP " +
+      "(ORDER BY o_orderstatus) FROM orders")
+    assert(!str.queryExecution.optimizedPlan.toString.contains("quantile_sketch"))
+    // and at the default k (compaction active on these group sizes), the
+    // estimate stays within the theorem's rank bound of the exact answer
+    ext.conf.set("spark.graft.approxQuantile.k", "512")
+    val n = Tables.orders(ext, TestSpark.sfDir).count()
+    ext.sql(sql).collect().foreach { r =>
+      val v = r.getDouble(1)
+      val (lo, hi) = (exactRows.values.min, exactRows.values.max)
+      assert(v >= lo * 0.5 && v <= hi * 1.5,
+        s"k=512 estimate $v wildly off exact range [$lo, $hi] (n=$n)")
+    }
+    ext.conf.set("spark.graft.approxQuantile", "false")
   }
 
   test("ApproxDistinctRewrite: opt-in HLL rewrite of count(DISTINCT x)") {
-    import org.apache.spark.sql.SparkSession
-    val orig = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions())
-        .getOrCreate()
-      val sql = "SELECT o_orderstatus, count(DISTINCT o_custkey) AS n " +
-        "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
-      Tables.orders(ext, TestSpark.sfDir).createOrReplaceTempView("orders")
+    val ext = TestSpark.extensionSession()
+    val sql = "SELECT o_orderstatus, count(DISTINCT o_custkey) AS n " +
+      "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
+    Tables.orders(ext, TestSpark.sfDir).createOrReplaceTempView("orders")
 
-      // flag off (default): exact plan, no HLL anywhere
-      val exact = ext.sql(sql)
-      assert(!exact.queryExecution.optimizedPlan.toString
-        .contains("approx_count_distinct"))
-      val exactRows = exact.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // flag off (default): exact plan, no HLL anywhere
+    val exact = ext.sql(sql)
+    assert(!exact.queryExecution.optimizedPlan.toString
+      .contains("approx_count_distinct"))
+    val exactRows = exact.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-      // flag on: the optimizer rewrites to HLL; values within the rsd bound
-      ext.conf.set("spark.graft.approxCountDistinct", "true")
-      val approx = ext.sql(sql)
-      assert(approx.queryExecution.optimizedPlan.toString
-        .contains("approx_count_distinct"),
-        approx.queryExecution.optimizedPlan.toString.take(500))
-      approx.collect().foreach { r =>
-        val (status, est) = (r.getString(0), r.getLong(1))
-        val truth = exactRows(status).toDouble
-        assert(math.abs(est - truth) / truth < 0.15,
-          s"$status: est $est vs exact $truth")
-      }
-
-      // multi-arg distinct count must NOT be rewritten (tuple semantics)
-      val multi = ext.sql("SELECT count(DISTINCT o_custkey, o_orderstatus) " +
-        "AS n FROM orders")
-      assert(!multi.queryExecution.optimizedPlan.toString
-        .contains("approx_count_distinct"))
-      assert(multi.head().getLong(0) > 0)
-      ext.conf.set("spark.graft.approxCountDistinct", "false")
-    } finally {
-      SparkSession.setDefaultSession(orig)
-      SparkSession.setActiveSession(orig)
+    // flag on: the optimizer rewrites to HLL; values within the rsd bound
+    ext.conf.set("spark.graft.approxCountDistinct", "true")
+    val approx = ext.sql(sql)
+    assert(approx.queryExecution.optimizedPlan.toString
+      .contains("approx_count_distinct"),
+      approx.queryExecution.optimizedPlan.toString.take(500))
+    approx.collect().foreach { r =>
+      val (status, est) = (r.getString(0), r.getLong(1))
+      val truth = exactRows(status).toDouble
+      assert(math.abs(est - truth) / truth < 0.15,
+        s"$status: est $est vs exact $truth")
     }
+
+    // multi-arg distinct count must NOT be rewritten (tuple semantics)
+    val multi = ext.sql("SELECT count(DISTINCT o_custkey, o_orderstatus) " +
+      "AS n FROM orders")
+    assert(!multi.queryExecution.optimizedPlan.toString
+      .contains("approx_count_distinct"))
+    assert(multi.head().getLong(0) > 0)
+    ext.conf.set("spark.graft.approxCountDistinct", "false")
   }
 
   test("morton is callable from SQL and rejects a non-constant bits arg") {

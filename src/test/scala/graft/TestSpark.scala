@@ -16,4 +16,21 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fresh session with [[graft.plans.GraftExtensions]] over the shared
+    * context (extensions apply only when a builder constructs a session, so
+    * the default one is cleared for the build). [[spark]] stays the default
+    * and active session. */
+  def extensionSession(): SparkSession = {
+    val orig = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions())
+      .getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(orig)
+      SparkSession.setActiveSession(orig)
+    }
+  }
 }
