@@ -699,7 +699,8 @@ object Etl extends QueryModule {
       val mxKey = Tables.orders(s, d).agg(max($"o_orderkey"))
         .collect()(0).getLong(0)
       val (lo, hi) = (mxKey * 3 / 8, mxKey * 4 / 8)
-      val pruned = VersionedTable.readRange(s, vtSeqPath, latest, lo, hi)
+      val pruned = VersionedTable.read(s, vtSeqPath, latest,
+        statsBounds = Map("o_orderkey" -> ((lo, hi))))
       val cond = $"o_orderkey" >= lo && $"o_orderkey" <= hi
       pruned
         .select($"o_orderkey", $"price_c",
@@ -925,7 +926,7 @@ object Etl extends QueryModule {
     // File skipping THROUGH THE SQL SURFACE: the manifest names its stats
     // column (scol), so a plain `WHERE o_orderkey BETWEEN lo AND hi` pushed
     // into format("graftvt") prunes the file list from the log — the user
-    // writes a predicate, not a readRange call. The graded row runs the
+    // writes a predicate, not a statsBounds call. The graded row runs the
     // range aggregate through the pure SQL path AND emits the live/pruned
     // file counts from the same statsBounds prune the relation applies;
     // the oracle re-derives the prune decision from the raw manifest

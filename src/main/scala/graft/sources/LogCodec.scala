@@ -27,7 +27,7 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * parses `_log` with SQL string functions), `DESCRIBE HISTORY`, and any
   * manifest written by an older engine all interoperate — the reader takes
   * its schema from each file's own footer, tolerating pre-`nrec`/`mstats`
-  * manifests exactly like the old `collectEntries` column probe did. */
+  * manifests. */
 private[graft] object LogCodec {
 
   /** One manifest row: the replayable entry plus the commit-metadata
@@ -220,7 +220,7 @@ private[graft] object LogCodec {
             // foreign writer) are NOT the same as an all-null chunk: an
             // uncounted chunk may hold any values, so treating it as
             // range-free would let manifest-based file skipping
-            // (readRange/statsBounds) wrongly prune a matching file. Mark
+            // (`read`'s statsBounds) wrongly prune a matching file. Mark
             // the column ineligible so the caller falls back to the Spark
             // stats pass.
             else if (st == null || st.isEmpty) bad += name

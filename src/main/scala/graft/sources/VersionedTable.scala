@@ -174,8 +174,8 @@ object VersionedTable {
   /** One manifest row. `action` is add|tomb|remove|noop; `smin`/`smax` are
     * the commit's per-file min/max of the table's declared stats column
     * (None when the table tracks none) — Iceberg-style column metrics,
-    * enabling [[readRange]] to prune the file list from the log alone,
-    * without opening a single footer. `scol` NAMES the column the stats
+    * enabling [[read]]'s `statsBounds` to prune the file list from the log
+    * alone, without opening a single footer. `scol` NAMES the column the stats
     * describe, so a reader that arrives with only a predicate (the SQL
     * surface) can decide skip-eligibility from the log itself instead of
     * requiring the caller to know the table's stats declaration out of
@@ -252,33 +252,6 @@ object VersionedTable {
       .filter(n => n.startsWith("c") && n.endsWith(".parquet"))
       .map(n => n.stripPrefix("c").stripSuffix(".parquet").toInt)
       .filter(_ <= version).foldLeft(-1)(math.max)
-  }
-
-  private def collectEntries(df: DataFrame): Seq[LogEntry] = {
-    // optional columns tolerate manifests written before each was recorded
-    val hasSchema = df.columns.contains("fschema")
-    val hasNrec = df.columns.contains("nrec")
-    val hasScol = df.columns.contains("scol")
-    val hasMstats = df.columns.contains("mstats")
-    val cols = Seq("version", "action", "file", "part", "smin", "smax") ++
-      (if (hasSchema) Seq("fschema") else Nil) ++
-      (if (hasNrec) Seq("nrec") else Nil) ++
-      (if (hasScol) Seq("scol") else Nil) ++
-      (if (hasMstats) Seq("mstats") else Nil)
-    val nrecIdx = if (hasSchema) 7 else 6
-    val scolIdx = nrecIdx + (if (hasNrec) 1 else 0)
-    val mstatsIdx = scolIdx + (if (hasScol) 1 else 0)
-    df.select(cols.map(col): _*).collect()
-      .map(r => LogEntry(r.getInt(0), r.getString(1), r.getString(2),
-        r.getString(3),
-        if (r.isNullAt(4)) None else Some(r.getLong(4)),
-        if (r.isNullAt(5)) None else Some(r.getLong(5)),
-        if (hasSchema && !r.isNullAt(6)) Some(r.getString(6)) else None,
-        if (hasNrec && !r.isNullAt(nrecIdx)) Some(r.getLong(nrecIdx)) else None,
-        if (hasScol && !r.isNullAt(scolIdx)) Some(r.getString(scolIdx)) else None,
-        if (hasMstats && !r.isNullAt(mstatsIdx)) Some(r.getString(mstatsIdx))
-        else None))
-      .toSeq
   }
 
   /** Manifest rows of versions in (`from`, `to`] — explicit per-version
@@ -367,6 +340,31 @@ object VersionedTable {
       // this set (with versions preserved; per-name/latest resolution is
       // version-order-dependent)
       rows.filter(e => e.action == "evolve" || e.action == "constraint"))
+  }
+
+  /** One version's replayed state, replayed on first use and then shared:
+    * `live` (data `add` and tombstone `tomb` entries) and `meta` (the
+    * evolve/constraint channel). A verb takes its remove set, its guards
+    * and every snapshot read it builds from this one replay. */
+  private final class Snapshot(spark: SparkSession, val path: String,
+                               val version: Int) {
+    private lazy val replayed = replayAll(spark, path, version)
+    def live: Seq[LogEntry] = replayed._1
+    def meta: Seq[LogEntry] = replayed._2
+    def constraints: Map[String, String] = constraintsOf(meta)
+    def read(partValues: Option[Set[String]] = None,
+             mergeSchema: Boolean = false): DataFrame =
+      VersionedTable.read(spark, path, version, partValues, mergeSchema,
+        preEntries = Some(live ++ meta))
+  }
+
+  /** A verb's read snapshot: `readVersion`, or the latest version when it
+    * is negative. Refuses a table with no version 0, naming the verb. */
+  private def snapshotOf(spark: SparkSession, path: String, what: String,
+                         readVersion: Int = -1): Snapshot = {
+    val v = if (readVersion >= 0) readVersion else latestVersion(spark, path)
+    require(v >= 0, s"$what: $path has no version 0 — create() first")
+    new Snapshot(spark, path, v)
   }
 
   /** Materializes `version`'s live set as a checkpoint manifest (atomic
@@ -820,12 +818,6 @@ object VersionedTable {
     }
   }
 
-  /** Union schema of the entries' RECORDED write schemas, merged by field
-    * name in commit order (a later commit's new columns append; all fields
-    * nullable since older files lack the late ones). None when any entry
-    * predates schema recording or two commits disagree on a field's type —
-    * callers then fall back to footer-based resolution. This is what makes
-    * a snapshot read schema-complete with ZERO footer reads. */
   /** The single recorded write schema shared by EVERY entry, or None when
     * any entry predates schema recording or two files disagree — the
     * zero-footer-reads schema source for plain (non-mergeSchema) reads. */
@@ -858,6 +850,12 @@ object VersionedTable {
     } else unionSchemaOf(adds)
   }
 
+  /** Union schema of the entries' RECORDED write schemas, merged by field
+    * name in commit order (a later commit's new columns append; all fields
+    * nullable since older files lack the late ones). None when any entry
+    * predates schema recording or two commits disagree on a field's type —
+    * callers then fall back to footer-based resolution. This is what makes
+    * a snapshot read schema-complete with ZERO footer reads. */
   private def unionSchemaOf(entries: Seq[LogEntry]): Option[StructType] = {
     if (entries.isEmpty || entries.exists(_.fschema.isEmpty)) return None
     val jsons = entries.sortBy(_.version).map(_.fschema.get).distinct
@@ -892,7 +890,7 @@ object VersionedTable {
                               adds: Seq[LogEntry], tombs: Seq[LogEntry],
                               removes: Seq[(String, String)],
                               opName: String, ts: Option[Long],
-                              evolves: Seq[LogEntry] = Nil): Boolean = {
+                              evolves: Seq[LogEntry]): Boolean = {
     val fileOps: Seq[LogEntry] =
       adds.map(_.copy(version = version, action = "add")) ++
       tombs.map(_.copy(version = version, action = "tomb")) ++
@@ -1155,7 +1153,8 @@ object VersionedTable {
     val srcLatest = latestVersion(spark, srcPath)
     require(srcVersion >= 0 && srcVersion <= srcLatest,
       s"cloneCommit: source version $srcVersion not in [0, $srcLatest]")
-    val live = liveEntries(spark, srcPath, srcVersion)
+    val src = new Snapshot(spark, srcPath, srcVersion)
+    val live = src.live
     val imported = live.filter(e =>
       !isAbsoluteRef(e.file) && !engineOwned(e.file))
     require(imported.isEmpty,
@@ -1166,9 +1165,9 @@ object VersionedTable {
       e.copy(version = 0, file = resolveFile(srcPath, e.file)))
     val adds = refs.filter(_.action == "add")
     val tombs = refs.filter(_.action == "tomb")
-    val schema = read(spark, srcPath, srcVersion, mergeSchema = true).schema
+    val schema = src.read(mergeSchema = true).schema
     val schemaEntry = if (schema.nonEmpty) Seq(evolveEntry(schema)) else Nil
-    val consEntries = constraintsAt(spark, srcPath, srcVersion).toSeq
+    val consEntries = src.constraints.toSeq
       .map { case (n, ex) => constraintEntry(n, Some(ex)) }
     // we own none of the referenced files: on a lost race, clean NOTHING
     commitAttempt(spark, dstPath, -1, adds, tombs, Nil, None, "clone", ts,
@@ -1201,43 +1200,6 @@ object VersionedTable {
       .foldLeft(-1L)(math.max)
   }
 
-  /** Snapshot read pruned by the manifest's column metrics: only data files
-    * whose [smin, smax] intersects [lo, hi] are handed to the reader —
-    * file skipping decided entirely from the log, no footer reads. Files
-    * without recorded stats are kept (conservative), and live tombstones
-    * are always applied (a tombstone carries keys, not ranges). The range
-    * predicate is NOT re-applied to rows — callers compose their own filter
-    * (which also lets Catalyst push it into the pruned scan). */
-  def readRange(spark: SparkSession, path: String, version: Int,
-                lo: Long, hi: Long): DataFrame = {
-    val entries = liveEntries(spark, path, version)
-    val dataFiles = entries.collect {
-      case e if e.action == "add" &&
-        e.smin.forall(_ <= hi) && e.smax.forall(_ >= lo) => resolveFile(path, e.file)
-    }
-    val tombFiles = entries.collect {
-      case e if e.action == "tomb" => resolveFile(path, e.file) }
-    if (dataFiles.isEmpty) read(spark, path, version, Some(Set.empty))
-    else {
-      val selected = entries.filter(e => e.action == "add" &&
-        e.smin.forall(_ <= hi) && e.smax.forall(_ >= lo))
-      val meta: Map[String, (Long, Long)] = selected.iterator.collect {
-        case e if e.fsize.isDefined =>
-          resolveFile(path, e.file) -> ((e.fsize.get, e.fmtime.getOrElse(0L)))
-      }.toMap
-      // split reader: convert-imported files reconstruct their partition
-      // columns via basePath, like read()/changes()
-      val data = readDataFiles(spark, path, dataFiles, () => spark.read,
-        knownSchema = uniformSchemaOf(selected), fileMeta = meta)
-      if (tombFiles.isEmpty) data
-      else {
-        val tomb = spark.read.parquet(tombFiles: _*)
-        data.join(tomb, tomb.columns.toSeq, "left_anti")
-          .select(data.columns.map(col).toSeq: _*)
-      }
-    }
-  }
-
   /** Blind append as a new commit — streaming ingest's natural write mode:
     * only adds files, removes nothing, touches no existing data (no read,
     * no shuffle against the table). Conflicts with nothing: losing a
@@ -1250,33 +1212,29 @@ object VersionedTable {
                    statsCol: Option[String] = None,
                    ts: Option[Long] = None, fileSplits: Int = 1,
                    opName: String = "append"): Commit = {
-    val cur = latestVersion(spark, path)
-    require(cur >= 0, s"appendCommit: $path has no version 0 — create() first")
-    val snap = replayAll(spark, path, cur)
+    val snap = snapshotOf(spark, path, "appendCommit")
     requireNoResurface(spark, snap, df.columns.toSeq, "appendCommit")
-    val adds = writeCommitFiles(spark, path, cur + 1, df, partitionCol, statsCol,
-      fileSplits)
-    requireConstraintsHold(spark, path, snap, adds)
-    commitAttempt(spark, path, cur, adds, Nil, Nil, None, opName, ts)
+    val adds = writeCommitFiles(spark, path, snap.version + 1, df, partitionCol,
+      statsCol, fileSplits)
+    requireConstraintsHold(spark, snap, adds)
+    commitAttempt(spark, path, snap.version, adds, Nil, Nil, None, opName, ts)
   }
 
   /** Refuse a write whose schema re-introduces a column name some live
     * data file still PHYSICALLY carries while the effective schema no
     * longer lists it (i.e. a dropped column): append-driven widening
     * would merge the name back into the union schema and the old files'
-    * values would resurface — the write-path twin of
-    * [[addColumnsCommit]]'s re-add guard. No-ops on tables with no
+    * values would resurface. [[addColumnsCommit]] runs the same guard on
+    * the names it adds. No-ops on tables with no
     * evolve entry (nothing was ever dropped); on a pre-schema-recording
     * log the effective schema is unknowable and the legacy footer-union
-    * behavior stands. `snap` is the verb's one replay of its read
-    * version ([[replayAll]]). */
-  private def requireNoResurface(spark: SparkSession,
-                                 snap: (Seq[LogEntry], Seq[LogEntry]),
+    * behavior stands. */
+  private def requireNoResurface(spark: SparkSession, snap: Snapshot,
                                  writeCols: Seq[String],
                                  what: String): Unit = {
-    val (live, evolves) = snap
-    if (evolves.isEmpty) return
-    effectiveSchemaOf(evolves, live.filter(_.action == "add")).foreach { eff =>
+    val (live, meta) = (snap.live, snap.meta)
+    if (meta.isEmpty) return
+    effectiveSchemaOf(meta, live.filter(_.action == "add")).foreach { eff =>
       val resolver = spark.sessionState.conf.resolver
       val fresh = writeCols.filterNot(c =>
         eff.exists(f => resolver(f.name, c)))
@@ -1308,14 +1266,12 @@ object VersionedTable {
                       partitionCol: String,
                       statsCol: Option[String] = None,
                       ts: Option[Long] = None, fileSplits: Int = 1): Commit = {
-    val cur = latestVersion(spark, path)
-    require(cur >= 0, s"overwriteCommit: $path has no version 0 — create() first")
-    val snap = replayAll(spark, path, cur)
-    val removes = snap._1.map(e => (e.file, e.part))
-    val adds = writeCommitFiles(spark, path, cur + 1, df, partitionCol,
+    val snap = snapshotOf(spark, path, "overwriteCommit")
+    val removes = snap.live.map(e => (e.file, e.part))
+    val adds = writeCommitFiles(spark, path, snap.version + 1, df, partitionCol,
       statsCol, fileSplits)
-    requireConstraintsHold(spark, path, snap, adds)
-    commitAttempt(spark, path, cur, adds, Nil, removes,
+    requireConstraintsHold(spark, snap, adds)
+    commitAttempt(spark, path, snap.version, adds, Nil, removes,
       Some((removes.map(_._2) ++ adds.map(_.part)).toSet), "overwrite", ts)
   }
 
@@ -1337,13 +1293,11 @@ object VersionedTable {
     // its changes against (SQL MERGE's matched/not-matched flag join) —
     // passing it extends conflict detection over the whole
     // classify-to-publish window, same contract as rewritePartitionsCommit
-    val cur =
-      if (readVersion >= 0) readVersion else latestVersion(spark, path)
-    require(cur >= 0, s"mergeCommit: $path has no version 0 — create() first")
+    val snap = snapshotOf(spark, path, "mergeCommit", readVersion)
+    val cur = snap.version
     // the merge rewrite covers only the AFFECTED partitions, so a change
     // batch re-carrying a dropped name would resurface the other
     // partitions' old bytes — same guard as append
-    val snap = replayAll(spark, path, cur)
     requireNoResurface(spark, snap, changes.columns.toSeq, "mergeCommit")
     val affected = affectedPartsOf(changes, partColsOf(partitionCol),
       "mergeCommit")
@@ -1357,19 +1311,18 @@ object VersionedTable {
         Some(Set.empty), "merge", ts)
     }
     val affectedSet = affected.toSet
-    val removes = snap._1
+    val removes = snap.live
       .collect { case e if affectedSet(e.part) => (e.file, e.part) }
     // mergeSchema: the affected slice may span commits on both sides of a
     // schema widening — without it the reader adopts one file's schema and
     // silently DROPS the late column from the other files' rows
-    val target = read(spark, path, cur, Some(affectedSet), mergeSchema = true,
-      preEntries = Some(snap._1 ++ snap._2))
+    val target = snap.read(Some(affectedSet), mergeSchema = true)
     val merged = MergeSink.mergeDataflow(
       target, changes, keyCols, partitionCol, opCol, seqCol, None)
     try {
       val adds = writeCommitFiles(spark, path, cur + 1, merged, partitionCol,
         statsCol)
-      requireConstraintsHold(spark, path, snap, adds)
+      requireConstraintsHold(spark, snap, adds)
       commitAttempt(spark, path, cur, adds, Nil, removes,
         Some(affectedSet), "merge", ts)
     } finally MergeSink.dropCheckpoint(merged)
@@ -1387,8 +1340,8 @@ object VersionedTable {
   def deleteCommit(spark: SparkSession, path: String, keys: DataFrame,
                    partitionCol: String,
                    ts: Option[Long] = None): Commit = {
-    val cur = latestVersion(spark, path)
-    require(cur >= 0, s"deleteCommit: $path has no version 0 — create() first")
+    // resolves the version only: a tombstone commit reads no snapshot
+    val cur = snapshotOf(spark, path, "deleteCommit").version
     val pCols = partColsOf(partitionCol)
     require(pCols.forall(keys.columns.contains),
       s"deleteCommit: keys must carry ${pCols.mkString(", ")} for " +
@@ -1430,15 +1383,12 @@ object VersionedTable {
     // whole read-to-publish window: a concurrent commit that touched an
     // affected partition after the caller's snapshot read ABORTS instead
     // of being silently overwritten by stale content.
-    val cur =
-      if (readVersion >= 0) readVersion else latestVersion(spark, path)
-    require(cur >= 0,
-      s"rewritePartitionsCommit: $path has no version 0 — create() first")
+    val snap = snapshotOf(spark, path, "rewritePartitionsCommit", readVersion)
+    val cur = snap.version
     if (parts.isEmpty)
       return commitAttempt(spark, path, cur, Nil, Nil, Nil,
         Some(Set.empty), opName, ts)
-    val snap = replayAll(spark, path, cur)
-    val removes = snap._1
+    val removes = snap.live
       .collect { case e if parts(e.part) => (e.file, e.part) }
     val adds = writeCommitFiles(spark, path, cur + 1, rewritten, partitionCol,
       statsCol)
@@ -1451,7 +1401,7 @@ object VersionedTable {
     }
     // UPDATE can assign a violating value — the COW rewrite enforces CHECK
     // constraints like any other write of new content
-    requireConstraintsHold(spark, path, snap, adds)
+    requireConstraintsHold(spark, snap, adds)
     commitAttempt(spark, path, cur, adds, Nil, removes, Some(parts), opName, ts)
   }
 
@@ -1470,30 +1420,13 @@ object VersionedTable {
                            parts: Set[String],
                            ts: Option[Long] = None,
                            readVersion: Int = -1): Commit = {
-    val cur =
-      if (readVersion >= 0) readVersion else latestVersion(spark, path)
-    require(cur >= 0,
-      s"dropPartitionsCommit: $path has no version 0 — create() first")
-    val removes = liveEntries(spark, path, cur)
+    val snap = snapshotOf(spark, path, "dropPartitionsCommit", readVersion)
+    val removes = snap.live
       .collect { case e if parts(e.part) => (e.file, e.part) }
-    commitAttempt(spark, path, cur, Nil, Nil, removes,
+    commitAttempt(spark, path, snap.version, Nil, Nil, removes,
       Some(parts), "delete", ts)
   }
 
-  /** RESTORE to an earlier version as a new commit (Delta's RESTORE
-    * TABLE): the table's latest state becomes `toVersion`'s content while
-    * HISTORY KEEPS GROWING — the rollback is itself a version, so the
-    * pre-restore state stays time-travelable and the restore is undoable.
-    * ZERO-COPY: the target version's data files are RE-REFERENCED in the
-    * new manifest, never copied (they are still on disk unless vacuum
-    * passed the restore point — then this fails with a clear error
-    * naming the missing file); files live at both ends are left untouched
-    * (minimal conflict scope, no manifest churn). The one exception is a
-    * partition the target version covered with live TOMBSTONES: it is
-    * MATERIALIZED (read with the deletion vectors applied, rewritten), so
-    * a restore commit is always adds+removes — [[changes]]'s commit-shape
-    * contract holds and CDF reports the restore as the row-level rollback
-    * diff, bounded by the two file sets. */
   /** Schema evolution as a METADATA-ONLY commit: appends nullable columns
     * to the table schema without touching one data file (Delta's ALTER
     * TABLE ADD COLUMNS). The commit carries a single `evolve` log entry
@@ -1513,10 +1446,8 @@ object VersionedTable {
       require(g.size == 1,
         s"addColumnsCommit: duplicate new column '${g.head.name}'")
     }
-    val cur = latestVersion(spark, path)
-    require(cur >= 0,
-      s"addColumnsCommit: $path has no version 0 — create() first")
-    val current = read(spark, path, cur, mergeSchema = true).schema
+    val snap = snapshotOf(spark, path, "addColumnsCommit")
+    val current = snap.read(mergeSchema = true).schema
     cols.foreach { f =>
       require(!current.exists(g => resolver(g.name, f.name)),
         s"addColumnsCommit: column '${f.name}' already exists")
@@ -1526,22 +1457,11 @@ object VersionedTable {
     // values instead of null — Delta needs column mapping for this;
     // without it the re-add must be refused until a rewrite (OPTIMIZE)
     // purges the physical column
-    val carried = liveEntries(spark, path, cur)
-      .flatMap(_.fschema).distinct
-      .flatMap(j => DataType.fromJson(j) match {
-        case s: StructType => s.fieldNames.toSeq
-        case _             => Nil
-      }).toSet
-    cols.foreach { f =>
-      require(!carried.exists(resolver(_, f.name)),
-        s"addColumnsCommit: a live data file still carries a dropped " +
-        s"column named '${f.name}' — its old values would resurface; " +
-        "OPTIMIZE the table first to purge it, then re-add")
-    }
+    requireNoResurface(spark, snap, cols.map(_.name), "addColumnsCommit")
     val widened =
       StructType(current.fields ++ cols.map(_.copy(nullable = true)))
-    commitAttempt(spark, path, cur, Nil, Nil, Nil, None, "add_columns", ts,
-      evolves = Seq(evolveEntry(widened)))
+    commitAttempt(spark, path, snap.version, Nil, Nil, Nil, None,
+      "add_columns", ts, evolves = Seq(evolveEntry(widened)))
   }
 
   /** Schema narrowing as a METADATA-ONLY commit (Delta's ALTER TABLE DROP
@@ -1565,10 +1485,8 @@ object VersionedTable {
         s"dropColumnsCommit: '$n' is a partition column — rows are " +
         "addressed by (key, partition); repartition via a rewrite instead")
     }
-    val cur = latestVersion(spark, path)
-    require(cur >= 0,
-      s"dropColumnsCommit: $path has no version 0 — create() first")
-    val current = read(spark, path, cur, mergeSchema = true).schema
+    val snap = snapshotOf(spark, path, "dropColumnsCommit")
+    val current = snap.read(mergeSchema = true).schema
     names.foreach { n =>
       require(current.exists(f => resolver(f.name, n)),
         s"dropColumnsCommit: column '$n' does not exist")
@@ -1579,7 +1497,7 @@ object VersionedTable {
     // rewrite retires the tombstones (OPTIMIZE materializes the
     // deletions). A tombstone predating schema recording is
     // conservatively assumed to use the column.
-    val tombCols = liveEntries(spark, path, cur)
+    val tombCols = snap.live
       .filter(_.action == "tomb")
       .map(_.fschema.flatMap(j => DataType.fromJson(j) match {
         case s: StructType => Some(s.fieldNames.toSeq)
@@ -1591,13 +1509,13 @@ object VersionedTable {
         "delete-identity column — the snapshot anti-join would lose " +
         "it; OPTIMIZE the table first to materialize the deletions")
     }
-    requireNoConstraintRef(spark, path, cur, names, "dropColumnsCommit")
+    requireNoConstraintRef(spark, snap, names, "dropColumnsCommit")
     val narrowed = StructType(current.fields.filterNot(f =>
       names.exists(resolver(f.name, _))))
     require(narrowed.nonEmpty,
       "dropColumnsCommit: cannot drop every column")
-    commitAttempt(spark, path, cur, Nil, Nil, Nil, None, "drop_columns", ts,
-      evolves = Seq(evolveEntry(narrowed)))
+    commitAttempt(spark, path, snap.version, Nil, Nil, Nil, None,
+      "drop_columns", ts, evolves = Seq(evolveEntry(narrowed)))
   }
 
   /** Active CHECK constraints of snapshot `version`: name → boolean SQL
@@ -1633,13 +1551,10 @@ object VersionedTable {
     require(name.matches("\\w+"),
       s"addConstraintCommit: constraint name must be a plain identifier, " +
       s"got '$name'")
-    val cur = latestVersion(spark, path)
-    require(cur >= 0,
-      s"addConstraintCommit: $path has no version 0 — create() first")
-    require(!constraintsAt(spark, path, cur).keys
-        .exists(_.equalsIgnoreCase(name)),
+    val snap = snapshotOf(spark, path, "addConstraintCommit")
+    require(!snap.constraints.keys.exists(_.equalsIgnoreCase(name)),
       s"addConstraintCommit: constraint '$name' already exists")
-    val df = read(spark, path, cur, mergeSchema = true)
+    val df = snap.read(mergeSchema = true)
     // the expression must analyze as BOOLEAN over the current schema
     val dt = try df.selectExpr(s"($expr) AS __c").schema.head.dataType
       catch { case e: Exception => throw new IllegalArgumentException(
@@ -1652,24 +1567,22 @@ object VersionedTable {
     require(bad.isEmpty,
       s"addConstraintCommit: existing rows violate CHECK ($expr), " +
       s"e.g. ${bad.headOption.getOrElse("")}")
-    commitAttempt(spark, path, cur, Nil, Nil, Nil, None, "add_constraint",
-      ts, evolves = Seq(constraintEntry(name, Some(expr))))
+    commitAttempt(spark, path, snap.version, Nil, Nil, Nil, None,
+      "add_constraint", ts, evolves = Seq(constraintEntry(name, Some(expr))))
   }
 
   /** `ALTER TABLE DROP CONSTRAINT name` — a metadata commit writing the
     * per-name drop marker (an entry with no expression). */
   def dropConstraintCommit(spark: SparkSession, path: String, name: String,
                            ts: Option[Long] = None): Commit = {
-    val cur = latestVersion(spark, path)
-    require(cur >= 0,
-      s"dropConstraintCommit: $path has no version 0 — create() first")
-    val active = constraintsAt(spark, path, cur)
+    val snap = snapshotOf(spark, path, "dropConstraintCommit")
+    val active = snap.constraints
     val actual = active.keys.find(_.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(
         s"dropConstraintCommit: no active constraint named '$name' " +
         s"(active: ${active.keys.mkString(", ")})"))
-    commitAttempt(spark, path, cur, Nil, Nil, Nil, None, "drop_constraint",
-      ts, evolves = Seq(constraintEntry(actual, None)))
+    commitAttempt(spark, path, snap.version, Nil, Nil, Nil, None,
+      "drop_constraint", ts, evolves = Seq(constraintEntry(actual, None)))
   }
 
   private def expression(spark: SparkSession, sql: String) =
@@ -1691,11 +1604,10 @@ object VersionedTable {
     catch { case _: Exception => true }
 
   /** Refuse dropping/renaming any column an active constraint mentions. */
-  private def requireNoConstraintRef(spark: SparkSession, path: String,
-                                     cur: Int, names: Seq[String],
-                                     what: String): Unit = {
+  private def requireNoConstraintRef(spark: SparkSession, snap: Snapshot,
+                                     names: Seq[String], what: String): Unit = {
     val resolver = spark.sessionState.conf.resolver
-    val cons = constraintsAt(spark, path, cur)
+    val cons = snap.constraints
     names.foreach { n =>
       cons.foreach { case (cn, ex) =>
         require(!exprReferences(spark, ex, n, resolver),
@@ -1713,15 +1625,14 @@ object VersionedTable {
     * schema widened by the batch's own, so a constraint referencing a
     * column this batch omits sees NULL — which passes, per SQL CHECK.
     * On violation the attempt files are cleaned and the write aborts.
-    * `snap` is the verb's one replay of its read version ([[replayAll]]):
-    * the constraint set and the effective schema both come from it. */
-  private def requireConstraintsHold(spark: SparkSession, path: String,
-                                     snap: (Seq[LogEntry], Seq[LogEntry]),
+    * The constraint set and the effective schema both come from `snap`,
+    * the verb's read snapshot. */
+  private def requireConstraintsHold(spark: SparkSession, snap: Snapshot,
                                      adds: Seq[LogEntry]): Unit = {
-    val (live, meta) = snap
-    val cons = constraintsOf(meta)
+    val path = snap.path
+    val cons = snap.constraints
     if (adds.isEmpty || cons.isEmpty) return
-    val eff = effectiveSchemaOf(meta, live.filter(_.action == "add"))
+    val eff = effectiveSchemaOf(snap.meta, snap.live.filter(_.action == "add"))
       .map(s => LogEntry(-1, "add", "", "", None, None, Some(s.json)))
     val schema = unionSchemaOf(eff.toSeq ++ adds)
     val files = adds.map(e => resolveFile(path, e.file))
@@ -1742,17 +1653,33 @@ object VersionedTable {
     }
   }
 
+  /** RESTORE to an earlier version as a new commit (Delta's RESTORE
+    * TABLE): the table's latest state becomes `toVersion`'s content while
+    * HISTORY KEEPS GROWING — the rollback is itself a version, so the
+    * pre-restore state stays time-travelable and the restore is undoable.
+    * ZERO-COPY: the target version's data files are RE-REFERENCED in the
+    * new manifest, never copied (they are still on disk unless vacuum
+    * passed the restore point — then this fails with a clear error
+    * naming the missing file); files live at both ends are left untouched
+    * (minimal conflict scope, no manifest churn). The one exception is a
+    * partition the target version covered with live TOMBSTONES: it is
+    * MATERIALIZED (read with the deletion vectors applied, rewritten), so
+    * a restore commit is always adds+removes — [[changes]]'s commit-shape
+    * contract holds and CDF reports the restore as the row-level rollback
+    * diff, bounded by the two file sets. */
   def restoreCommit(spark: SparkSession, path: String, toVersion: Int,
                     partitionCol: String, statsCol: Option[String] = None,
                     ts: Option[Long] = None): Commit = {
-    val cur = latestVersion(spark, path)
-    require(cur >= 0, s"restoreCommit: $path has no version 0 — create() first")
+    val snap = snapshotOf(spark, path, "restoreCommit")
+    val cur = snap.version
     require(toVersion >= 0 && toVersion <= cur,
       s"restoreCommit: version $toVersion not in [0, $cur]")
-    val target = liveEntries(spark, path, toVersion)
-    val tombParts = target.collect { case e if e.action == "tomb" => e.part }.toSet
-    val targetData = target.filter(_.action == "add")
-    val curLive = liveEntries(spark, path, cur)
+    val to =
+      if (toVersion == cur) snap else new Snapshot(spark, path, toVersion)
+    val tombParts =
+      to.live.collect { case e if e.action == "tomb" => e.part }.toSet
+    val targetData = to.live.filter(_.action == "add")
+    val curLive = snap.live
     val curFiles = curLive.map(_.file).toSet
     val readds = targetData.filter(e => !tombParts(e.part) && !curFiles(e.file))
     val keepFiles = targetData.collect {
@@ -1772,9 +1699,8 @@ object VersionedTable {
         // union may include the tombstone files' (key-only) schemas and
         // reorder columns, and a V1 catalog table rejects a relation whose
         // column ORDER drifts from the stored schema
-        val src = read(spark, path, toVersion, Some(tombParts),
-          mergeSchema = true)
-        val order = read(spark, path, toVersion).columns
+        val src = to.read(Some(tombParts), mergeSchema = true)
+        val order = to.read().columns
         val cols = order.filter(src.columns.contains(_)) ++
           src.columns.filterNot(order.contains(_))
         writeCommitFiles(spark, path, cur + 1,
@@ -1791,10 +1717,10 @@ object VersionedTable {
     // metadata-only ALTER) commit the evolve entry alone; a restore that
     // carries one is a metadata commit, so any racing commit aborts it.
     val schemaEvolve: Seq[LogEntry] =
-      if (replayEntries(spark, path, cur).forall(_.action != "evolve")) Nil
+      if (snap.meta.forall(_.action != "evolve")) Nil
       else {
-        val tgt = read(spark, path, toVersion).schema
-        if (tgt == read(spark, path, cur).schema) Nil
+        val tgt = to.read().schema
+        if (tgt == snap.read().schema) Nil
         else Seq(evolveEntry(tgt))
       }
     val affected = (adds.map(_.part) ++ removes.map(_._2)).toSet
@@ -1817,22 +1743,9 @@ object VersionedTable {
   def optimizeCommit(spark: SparkSession, path: String, partitionCol: String,
                      partValues: Option[Set[String]] = None,
                      statsCol: Option[String] = None,
-                     ts: Option[Long] = None): Commit = {
-    val cur = latestVersion(spark, path)
-    require(cur >= 0, s"optimizeCommit: $path has no version 0 — create() first")
-    val removes = liveEntries(spark, path, cur)
-      .collect { case e if partValues.forall(_(e.part)) => (e.file, e.part) }
-    if (removes.isEmpty)
-      return commitAttempt(spark, path, cur, Nil, Nil, Nil,
-        Some(Set.empty), "optimize", ts)
-    // mergeSchema for the same reason as mergeCommit: compacting files
-    // from both sides of a schema widening must keep the late column
-    val target = read(spark, path, cur, partValues, mergeSchema = true)
-    val adds = writeCommitFiles(spark, path, cur + 1, target, partitionCol,
-      statsCol)
-    commitAttempt(spark, path, cur, adds, Nil, removes,
-      Some(removes.map(_._2).toSet), "optimize", ts)
-  }
+                     ts: Option[Long] = None): Commit =
+    compactCommit(spark, path, partitionCol, partValues, statsCol, ts,
+      "optimize", zCols = Nil, files = 0, bits = 0)
 
   /** `RENAME COLUMN a TO b` as a REWRITE commit. The log is
     * name-addressed (no Delta column mapping, by design — see
@@ -1860,29 +1773,27 @@ object VersionedTable {
       "addressed by (key, partition); repartition via a rewrite instead")
     require(!resolver(from, to),
       s"renameColumnCommit: '$from' and '$to' are the same name")
-    val cur = latestVersion(spark, path)
-    require(cur >= 0,
-      s"renameColumnCommit: $path has no version 0 — create() first")
-    val current = read(spark, path, cur, mergeSchema = true)
+    val snap = snapshotOf(spark, path, "renameColumnCommit")
+    val current = snap.read(mergeSchema = true)
     require(current.schema.exists(f => resolver(f.name, from)),
       s"renameColumnCommit: column '$from' does not exist")
     require(!current.schema.exists(f => resolver(f.name, to)),
       s"renameColumnCommit: column '$to' already exists")
-    requireNoConstraintRef(spark, path, cur, Seq(from), "renameColumnCommit")
+    requireNoConstraintRef(spark, snap, Seq(from), "renameColumnCommit")
     // a declared stats column follows the rename (new files record their
     // min/max under the NEW name; old files leave the manifest with this
     // commit, so pruning stays coherent)
     val effStats = statsCol.map(s => if (resolver(s, from)) to else s)
     val renamed = current.withColumnRenamed(from, to)
-    val removes = liveEntries(spark, path, cur).map(e => (e.file, e.part))
+    val removes = snap.live.map(e => (e.file, e.part))
     val adds =
       if (removes.isEmpty) Nil
-      else writeCommitFiles(spark, path, cur + 1, renamed, partitionCol,
-        effStats)
+      else writeCommitFiles(spark, path, snap.version + 1, renamed,
+        partitionCol, effStats)
     // a metadata commit: any racing non-empty commit aborts it, so it
     // needs no partition scope
-    commitAttempt(spark, path, cur, adds, Nil, removes, None, "rename_column",
-      ts, evolves = Seq(evolveEntry(renamed.schema)))
+    commitAttempt(spark, path, snap.version, adds, Nil, removes, None,
+      "rename_column", ts, evolves = Seq(evolveEntry(renamed.schema)))
   }
 
   /** OPTIMIZE ... ZORDER BY as a commit — re-CLUSTERING inside the log
@@ -1908,14 +1819,43 @@ object VersionedTable {
       s"zorderCommit: exactly two z-order columns (got ${zCols.size}) — the " +
       "Morton interleave is pairwise; nest commits for higher dimensions")
     require(files > 0, "zorderCommit: files must be positive")
-    val cur = latestVersion(spark, path)
-    require(cur >= 0, s"zorderCommit: $path has no version 0 — create() first")
-    val removes = liveEntries(spark, path, cur)
+    compactCommit(spark, path, partitionCol, partValues, statsCol, ts,
+      "zorder", zCols, files, bits)
+  }
+
+  /** The body of [[optimizeCommit]] (no `zCols`) and [[zorderCommit]]:
+    * rewrite the chosen partitions' live rows and remove their entries,
+    * clustered by the Morton key of `zCols` into ~`files` files when
+    * given. */
+  private def compactCommit(spark: SparkSession, path: String,
+                            partitionCol: String,
+                            partValues: Option[Set[String]],
+                            statsCol: Option[String], ts: Option[Long],
+                            opName: String, zCols: Seq[String], files: Int,
+                            bits: Int): Commit = {
+    val snap = snapshotOf(spark, path, s"${opName}Commit")
+    val cur = snap.version
+    val removes = snap.live
       .collect { case e if partValues.forall(_(e.part)) => (e.file, e.part) }
     if (removes.isEmpty)
       return commitAttempt(spark, path, cur, Nil, Nil, Nil,
-        Some(Set.empty), "zorder", ts)
-    val target = read(spark, path, cur, partValues, mergeSchema = true)
+        Some(Set.empty), opName, ts)
+    // mergeSchema for the same reason as mergeCommit: compacting files
+    // from both sides of a schema widening must keep the late column
+    val target = snap.read(partValues, mergeSchema = true)
+    val clusterBy =
+      if (zCols.isEmpty) None else Some(mortonKey(target, zCols, bits))
+    val adds = writeCommitFiles(spark, path, cur + 1, target, partitionCol,
+      statsCol, extraStatsCols = zCols, clusterBy = clusterBy,
+      clusterFiles = files)
+    commitAttempt(spark, path, cur, adds, Nil, removes,
+      Some(removes.map(_._2).toSet), opName, ts)
+  }
+
+  /** Morton interleave of the two `zCols`, each bucketized to 2^`bits`
+    * buckets over its observed domain in `target`. */
+  private def mortonKey(target: DataFrame, zCols: Seq[String],
+                        bits: Int): Column = {
     zCols.foreach(c => require(target.columns.contains(c),
       s"zorderCommit: column $c not in table schema"))
     // per-column domain for bucketization (double arithmetic: no overflow
@@ -1935,13 +1875,8 @@ object VersionedTable {
           (col(c).cast("double") - mn) / span * maxBucket).cast("long"),
           lit(0L)), lit(maxBucket))
       }
-    val z = graft.plans.MortonInterleave.morton(
+    graft.plans.MortonInterleave.morton(
       bucket(zCols(0), 0), bucket(zCols(1), 2), bits)
-    val adds = writeCommitFiles(spark, path, cur + 1, target, partitionCol,
-      statsCol, extraStatsCols = zCols, clusterBy = Some(z),
-      clusterFiles = files)
-    commitAttempt(spark, path, cur, adds, Nil, removes,
-      Some(removes.map(_._2).toSet), "zorder", ts)
   }
 
   /** Commit metadata, one row per version: (version, ts, operation, file-op

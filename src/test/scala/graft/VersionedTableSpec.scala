@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import graft.sources.VersionedTable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The transaction-log layer on top of the partition-COW merge: snapshot
@@ -195,7 +196,8 @@ class VersionedTableSpec extends AnyFunSuite {
       baseDf.filter($"k" > 15), "p", Some("k"))
     val entries = VersionedTable.liveEntries(spark, dir, 1)
     assert(entries.forall(e => e.smin.nonEmpty && e.smax.nonEmpty))
-    val pruned = VersionedTable.readRange(spark, dir, 1, 20L, 25L)
+    val pruned = VersionedTable.read(spark, dir, 1,
+      statsBounds = Map("k" -> ((20L, 25L))))
     assert(pruned.inputFiles.length < entries.size)
     // lossless: pruned read + residual filter ≡ full read + filter
     val full = VersionedTable.read(spark, dir, 1)
@@ -736,14 +738,32 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(!v2.contains(2L) && v2(8L) == 888L && v2.size == 29)
   }
 
-  test("readRange applies tombstones") {
+  test("a stats-pruned read applies tombstones") {
     val dir = Files.createTempDirectory("graft_vt").toString + "/t"
     VersionedTable.create(spark, dir, baseDf, "p", Some("k"))
     VersionedTable.deleteCommit(spark, dir, Seq((22L, "p0")).toDF("k", "p"), "p")
-    val ks = VersionedTable.readRange(spark, dir, 1, 20L, 25L)
+    val ks = VersionedTable.read(spark, dir, 1,
+        statsBounds = Map("k" -> ((20L, 25L))))
       .filter($"k".between(20, 25)).select($"k")
       .collect().map(_.getLong(0)).toSet
     assert(ks == Set(20L, 21L, 23L, 24L, 25L))
+  }
+
+  test("a stats-pruned read after DROP/ADD COLUMNS returns the effective " +
+      "schema") {
+    val dir = Files.createTempDirectory("graft_vt").toString + "/t"
+    VersionedTable.create(spark, dir,
+      baseDf.filter($"k" <= 15), "p", Some("k"))
+    VersionedTable.appendCommit(spark, dir,
+      baseDf.filter($"k" > 15), "p", Some("k"))
+    VersionedTable.dropColumnsCommit(spark, dir, Seq("v"), "p")
+    VersionedTable.addColumnsCommit(spark, dir, Seq(StructField("w", LongType)))
+    val live = VersionedTable.liveEntries(spark, dir, 3)
+    val pruned = VersionedTable.read(spark, dir, 3,
+      statsBounds = Map("k" -> ((20L, 25L))))
+    assert(pruned.columns.toSeq == Seq("k", "p", "w"))
+    assert(pruned.inputFiles.length < live.size)
+    assert(pruned.filter($"k".between(20, 25)).count() == 6)
   }
 
   // ---- change data feed ----
