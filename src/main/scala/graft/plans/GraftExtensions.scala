@@ -13,10 +13,18 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `minhash_sketch` available in SQL from the first query — no per-session
   * `GraftFunctions.register` call needed. Both paths share the same
   * expression builders, so behavior is identical.
+  *
+  * Both also register the engine's local filesystem for `file:` paths
+  * ([[graft.sources.LocalFiles]]). `withExtensions` applies this class
+  * before the SparkContext starts; `spark.sql.extensions` applies it after,
+  * when registering reloads the configurations already built, and a `file:`
+  * `FileSystem` cached before then stays Hadoop's own.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // first, so it precedes the SparkContext under `withExtensions`
+    graft.sources.LocalFiles.register()
     ext.injectFunction((
       FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotFold].getName, "vec_dot"),

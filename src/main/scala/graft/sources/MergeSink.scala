@@ -90,8 +90,10 @@ object MergeSink {
       .withColumn(partitionCol, col(partitionCol).cast(pType))
       .filter(col(partitionCol).isin(affected: _*))
 
+    // checkpointed: the write overwrites its own read source, and `merged`
+    // is read twice (the per-partition counts, then the write)
     val merged = mergeDataflow(target, changes, keyCols, partitionCol,
-      opCol, seqCol, targetSeqCol)
+      opCol, seqCol, targetSeqCol).localCheckpoint()
 
     try {
       // one pass over the checkpointed result answers BOTH observability
@@ -131,9 +133,10 @@ object MergeSink {
     * src=0 base, src=1 changes; exactly one survivor per key; 'D' survivors
     * drop out. Unconditional mode: changes trump the target, higher seq wins
     * within the batch. Conditional mode (targetSeqCol): the globally newest
-    * version wins, change beats target only on a tie. The result is
-    * localCheckpoint'd (callers write over or derive from their own read
-    * source) — release it with [[dropCheckpoint]]. */
+    * version wins, change beats target only on a tie. The result is a plain
+    * lazy plan: a caller that overwrites its read source or reads the
+    * result twice checkpoints it ([[mergeInto]]); `mergeCommit` writes it
+    * once into a fresh attempt dir and needs no checkpoint. */
   private[sources] def mergeDataflow(target: DataFrame, changes: DataFrame,
       keyCols: Seq[String], partitionCol: String, opCol: String,
       seqCol: String, targetSeqCol: Option[String]): DataFrame = {
@@ -168,14 +171,13 @@ object MergeSink {
       .withColumn("__rn", row_number().over(ordered))
       .filter(col("__rn") === 1 && (col("__op").isNull || col("__op") =!= "D"))
       .select((keyCols ++ payloadCols ++ pCols).map(col): _*)
-      .localCheckpoint() // sever lineage: the write overwrites its own source
   }
 
   /** Dataset.unpersist does NOT drop localCheckpoint blocks (they are
     * cached partitions of the checkpointed RDD, not a cached query) —
     * unpersist the backing RDD itself so a long CDC session applying
     * many batches doesn't accumulate checkpoint storage. */
-  private[sources] def dropCheckpoint(merged: DataFrame): Unit =
+  private def dropCheckpoint(merged: DataFrame): Unit =
     merged.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)

@@ -1317,15 +1317,14 @@ object VersionedTable {
     // schema widening — without it the reader adopts one file's schema and
     // silently DROPS the late column from the other files' rows
     val target = snap.read(Some(affectedSet), mergeSchema = true)
+    // written once, into a fresh attempt dir: no checkpoint needed
     val merged = MergeSink.mergeDataflow(
       target, changes, keyCols, partitionCol, opCol, seqCol, None)
-    try {
-      val adds = writeCommitFiles(spark, path, cur + 1, merged, partitionCol,
-        statsCol)
-      requireConstraintsHold(spark, snap, adds)
-      commitAttempt(spark, path, cur, adds, Nil, removes,
-        Some(affectedSet), "merge", ts)
-    } finally MergeSink.dropCheckpoint(merged)
+    val adds = writeCommitFiles(spark, path, cur + 1, merged, partitionCol,
+      statsCol)
+    requireConstraintsHold(spark, snap, adds)
+    commitAttempt(spark, path, cur, adds, Nil, removes,
+      Some(affectedSet), "merge", ts)
   }
 
   /** Row-level DELETE as a merge-on-read commit: writes the (distinct) key

@@ -4,9 +4,8 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.sources.VersionedTable
-import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path,
-  RawLocalFileSystem}
+import graft.sources.{RawLocalFiles, VersionedTable}
+import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,7 +32,8 @@ object ManifestOpens {
     }
 }
 
-class CountingRawLocalFs extends RawLocalFileSystem {
+/** The engine's raw local filesystem, counting manifest opens. */
+class CountingRawLocalFs extends RawLocalFiles {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     ManifestOpens.record(f)
     super.open(f, bufferSize)
@@ -41,7 +41,7 @@ class CountingRawLocalFs extends RawLocalFileSystem {
 }
 
 /** The checksummed local filesystem over the counting raw one, so `.crc`
-  * sidecars behave exactly as under the default `file:` implementation. */
+  * sidecars behave exactly as under the engine's `file:` implementation. */
 class CountingLocalFs extends LocalFileSystem(new CountingRawLocalFs)
 
 /** Every versioned-table verb replays each version it reads at most once:

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole suite (forked JVM). */
+/** One shared local session for the whole suite (forked JVM), on the
+  * engine's `file:` filesystem ([[graft.sources.LocalFiles]]): the resource
+  * is registered before the session, and the filesystem cache, exist. */
 object TestSpark {
   lazy val spark: SparkSession = {
+    graft.sources.LocalFiles.register()
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 import graft.sources.VersionedTable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
@@ -725,6 +728,48 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.appendCommit(spark, dir,
       Seq((2L, 8L, "p1")).toDF("k", "v", "p"), "p")
     assert(state(dir, 4)(2L) == 8L, "post-materialization re-insert visible")
+  }
+
+  /** SQL executions started while `body` runs. The listener bus is
+    * asynchronous, so events are counted between two marker jobs' starts,
+    * which it delivers in order with everything posted around them. */
+  private def sqlExecutions(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("graft-marker")).foreach(seen.put(_))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => seen.put("sql")
+        case _ =>
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker("graft-marker-0"); body; marker("graft-marker-1")
+      val events = Iterator.continually(
+        seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(_ != "graft-marker-1").toSeq
+      events.dropWhile(_ != "graft-marker-0").count(_ == "sql")
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("mergeCommit runs the partition probe and the write, no checkpoint") {
+    val dir = newTable()
+    val n = sqlExecutions(VersionedTable.mergeCommit(spark, dir,
+      changes(Seq((1L, 999L, "p0", "U"), (100L, 1000L, "p1", "U"))),
+      Seq("k"), "p"))
+    // the distinct partition values of the changes, then the write; the
+    // footers, the log and the listing are read without a Spark job
+    assert(n == 2, s"$n SQL executions")
+    val v1 = state(dir, 1)
+    assert(v1.size == 31 && v1(1L) == 999L && v1(100L) == 1000L)
   }
 
   test("mergeCommit materializes and retires its partitions' tombstones") {
