@@ -693,26 +693,21 @@ object Etl extends QueryModule {
     "etl_manifest_skipping" -> ((s, d) => {
       import s.implicits._
       writeVersionedFixture(s, d)
-      import graft.sources.VersionedTable
+      import graft.sources.{KnownFilesIndex, VersionedTable}
       val latest = VersionedTable.latestVersion(s, vtSeqPath)
       val entries = VersionedTable.liveEntries(s, vtSeqPath, latest)
       val mxKey = Tables.orders(s, d).agg(max($"o_orderkey"))
         .collect()(0).getLong(0)
       val (lo, hi) = (mxKey * 3 / 8, mxKey * 4 / 8)
-      val pruned = VersionedTable.read(s, vtSeqPath, latest,
-        statsBounds = Map("o_orderkey" -> ((lo, hi))))
-      val cond = $"o_orderkey" >= lo && $"o_orderkey" <= hi
+      val pruned = VersionedTable.read(s, vtSeqPath, latest)
+        .filter($"o_orderkey" >= lo && $"o_orderkey" <= hi)
       pruned
-        .select($"o_orderkey", $"price_c",
-          col("_metadata.file_path").as("fp"))
-        .agg(count_distinct($"fp").as("n_files_scanned"),
-          sum(when(cond, 1L).otherwise(0L)).as("n_rows"),
-          expr("bit_xor(CASE WHEN o_orderkey >= " + lo +
-            " AND o_orderkey <= " + hi + " THEN o_orderkey END)")
-            .as("xor_key"),
-          sum(when(cond, $"price_c")).as("sum_price_c"))
+        .agg(count(lit(1)).as("n_rows"),
+          expr("bit_xor(o_orderkey)").as("xor_key"),
+          sum($"price_c").as("sum_price_c"))
         .select(lit(entries.size.toLong).as("n_files_live"),
-          $"n_files_scanned", $"n_rows", $"xor_key", $"sum_price_c")
+          lit(KnownFilesIndex.filesScanned(pruned)).as("n_files_scanned"),
+          $"n_rows", $"xor_key", $"sum_price_c")
     }),
 
     // Vacuum with retention, graded through the on-disk file set: the
@@ -926,9 +921,9 @@ object Etl extends QueryModule {
     // File skipping THROUGH THE SQL SURFACE: the manifest names its stats
     // column (scol), so a plain `WHERE o_orderkey BETWEEN lo AND hi` pushed
     // into format("graftvt") prunes the file list from the log — the user
-    // writes a predicate, not a statsBounds call. The graded row runs the
-    // range aggregate through the pure SQL path AND emits the live/pruned
-    // file counts from the same statsBounds prune the relation applies;
+    // writes a predicate and the file index decides. The graded row runs
+    // the range aggregate through the pure SQL path AND emits the
+    // live/pruned file counts of the same filter's planned scan;
     // the oracle re-derives the prune decision from the raw manifest
     // (including the scol gate) and the aggregate from the full base
     // table — a relation that scans everything, over-prunes, or mis-reads
@@ -938,16 +933,16 @@ object Etl extends QueryModule {
     "etl_sql_skipping" -> ((s, d) => {
       import s.implicits._
       writeVersionedFixture(s, d)
-      import graft.sources.VersionedTable
+      import graft.sources.{KnownFilesIndex, VersionedTable}
       val latest = VersionedTable.latestVersion(s, vtSeqPath)
       val nLive = VersionedTable.liveEntries(s, vtSeqPath, latest).size
       val mxKey = Tables.orders(s, d).agg(max($"o_orderkey"))
         .collect()(0).getLong(0)
       val (lo, hi) = (mxKey * 5 / 8, mxKey * 6 / 8)
-      val nScanned = VersionedTable.read(s, vtSeqPath, latest, None, false,
-        Map("o_orderkey" -> (lo, hi))).inputFiles.length
-      s.read.format("graftvt").load(vtSeqPath)
-        .filter($"o_orderkey" >= lo && $"o_orderkey" <= hi)
+      val cond = $"o_orderkey" >= lo && $"o_orderkey" <= hi
+      val nScanned = KnownFilesIndex.filesScanned(
+        VersionedTable.read(s, vtSeqPath, latest).filter(cond))
+      s.read.format("graftvt").load(vtSeqPath).filter(cond)
         .agg(count(lit(1)).as("n_rows"),
           expr("bit_xor(o_orderkey)").as("xor_key"),
           sum($"price_c").as("sum_price_c"))
@@ -975,16 +970,17 @@ object Etl extends QueryModule {
     "etl_zorder_commit" -> ((s, d) => {
       import s.implicits._
       writeZorderVtFixture(s, d)
-      import graft.sources.VersionedTable
+      import graft.sources.{KnownFilesIndex, VersionedTable}
       // rectangle inside every SF's populated domain (x = custkey bucket
       // only reaches ~150 at the smallest SF; y residues are dense at all)
       val (lo1, hi1, lo2, hi2) = (32L, 95L, 256L, 511L)
       Seq(0, 1).map { v =>
         val nLive = VersionedTable.liveEntries(s, vtZPath, v).size.toLong
-        val nScan = VersionedTable.read(s, vtZPath, v, None, false,
-          Map("x" -> (lo1, hi1), "y" -> (lo2, hi2))).inputFiles.length.toLong
+        val rect = $"x".between(lo1, hi1) && $"y".between(lo2, hi2)
+        val nScan = KnownFilesIndex.filesScanned(
+          VersionedTable.read(s, vtZPath, v).filter(rect))
         s.read.format("graftvt").option("versionAsOf", v).load(vtZPath)
-          .filter($"x".between(lo1, hi1) && $"y".between(lo2, hi2))
+          .filter(rect)
           .agg(count(lit(1)).as("n_rows"),
             expr("bit_xor(o_orderkey)").as("xor_key"),
             sum($"price_c").as("sum_price_c"))
@@ -1290,12 +1286,12 @@ object Etl extends QueryModule {
 
     // PARTITION pruning from pushed SQL filters (Delta's behavior): a
     // plain `WHERE pmonth = '1997-02' AND bucket IN ('0','2')` on a
-    // graftvt relation that declares its partition columns must decide
-    // the file list FROM THE MANIFEST's part keys — at 100 TB the other
-    // partitions' files are never listed, let alone opened. The row runs
-    // the aggregate through the pure SQL path and emits live vs scanned
-    // file counts (the scanned count re-derived through the library with
-    // the same composite keys the relation's partFilterValues produces);
+    // graftvt relation must decide the file list FROM THE MANIFEST's part
+    // keys, which name their columns (no reader option) — at 100 TB the
+    // other partitions' files are never listed, let alone opened. The row
+    // runs the aggregate through the pure SQL path and emits live vs
+    // scanned file counts (the scanned count from the same filter's
+    // planned scan over the library read);
     // the oracle recomputes the counts from the partition domain and the
     // aggregate from the base table. Over-pruning (missing rows),
     // under-pruning (wrong n_scanned), or a broken multi-column key
@@ -1303,17 +1299,15 @@ object Etl extends QueryModule {
     // APPLIES the prune (a deleted sibling file is never opened).
     "etl_sql_partition_prune" -> ((s, d) => {
       import s.implicits._
-      import graft.sources.VersionedTable
+      import graft.sources.{KnownFilesIndex, VersionedTable}
       writeMultipartFixture(s, d)
       val latest = VersionedTable.latestVersion(s, vtMpPath)
       val nLive = VersionedTable.liveEntries(s, vtMpPath, latest)
         .count(_.action == "add").toLong
-      val wanted = Set("pmonth=1997-02/bucket=0", "pmonth=1997-02/bucket=2")
-      val nScan = VersionedTable.read(s, vtMpPath, latest, Some(wanted))
-        .inputFiles.length.toLong
-      s.read.format("graftvt").option("partitionCol", "pmonth,bucket")
-        .load(vtMpPath)
-        .filter($"pmonth" === "1997-02" && $"bucket".isin("0", "2"))
+      val cond = $"pmonth" === "1997-02" && $"bucket".isin("0", "2")
+      val nScan = KnownFilesIndex.filesScanned(
+        VersionedTable.read(s, vtMpPath, latest).filter(cond))
+      s.read.format("graftvt").load(vtMpPath).filter(cond)
         .agg(count(lit(1)).as("n_rows"),
           expr("bit_xor(o_orderkey)").as("xor_key"),
           sum($"price_c").as("sum_price_c"))

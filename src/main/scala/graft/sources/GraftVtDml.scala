@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.plans.logical.{Project, SubqueryAlias, View}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, SupportsSubquery, UpdateTable}
@@ -10,7 +9,6 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.graftshim.PlanShim
-import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** SQL `UPDATE` and `DELETE FROM` for `graftvt` tables — the statements
   * route to versioned commits, completing the pure-SQL DML surface next to
@@ -295,13 +293,6 @@ final case class GraftVtDeleteCommand(
     @transient condition: Expression) extends LeafRunnableCommand
     with SupportsSubquery {
 
-  /** Types whose partition-directory rendering (cast to string at write)
-    * provably roundtrips through a cast back — the shared definition
-    * [[GraftVtRelation.partRenderSafeTypes]] (one source of truth with
-    * the pruning-side literal rendering). */
-  private def metadataSafe(t: DataType): Boolean =
-    GraftVtRelation.partRenderSafeTypes(t)
-
   override def run(spark: SparkSession): Seq[Row] = {
     val rel = targetRelation.relation.asInstanceOf[GraftVtRelation]
     val resolver = spark.sessionState.conf.resolver
@@ -322,38 +313,35 @@ final case class GraftVtDeleteCommand(
       condition.deterministic &&
       !SubqueryExpression.hasSubquery(condition) &&
       condition.references.forall(a => pCols.exists(resolver(_, a.name))) &&
-      pFields.forall(f => metadataSafe(f.dataType))
-    if (metadataOnly) {
-      // evaluate the predicate on the manifest's partition-value domain —
-      // a driver-local frame of the live part keys, typed back to the
-      // table's column types; zero data I/O at any table size
-      val live = VersionedTable.liveEntries(spark, rel.path, readVersion)
-        .map(_.part).distinct
-      val byName = PlanShim.column(condition.transform {
-        case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-      })
-      val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
-      live.foreach { p =>
-        val vals = VersionedTable.partValuesOf(pCols, p)
-        rows.add(Row.fromSeq(pCols.map(vals(_)) :+ p))
+      pFields.forall(f => KnownFilesIndex.partRenderSafeTypes(f.dataType))
+    // evaluate the predicate on the pinned version's part keys with the
+    // file index's partition rule — driver-local, zero data I/O at any
+    // table size; a key is dropped only where the predicate is TRUE. A key
+    // the rule cannot decide (one holding Spark's default partition name,
+    // or an evaluation that throws) sends the statement down the
+    // row-level branch, which judges the rows themselves.
+    val metadataDrop: Option[Set[String]] =
+      if (!metadataOnly) None
+      else KnownFilesIndex.partitionRule(Seq(condition), pCols,
+          targetRelation.schema).flatMap { rule =>
+        val decided = rel.livePartKeys.map(k =>
+          k -> scala.util.Try(rule(k)).toOption.flatten)
+        if (decided.forall(_._2.isDefined))
+          Some(decided.collect { case (k, Some(true)) => k }.toSet)
+        else None
       }
-      val schema = StructType(
-        pCols.map(c => StructField(c, StringType)) :+
-        StructField("__graft_part", StringType))
-      val typed = pFields.foldLeft(spark.createDataFrame(rows, schema)) {
-        (df, f) => df.withColumn(f.name, col(f.name).cast(f.dataType))
-      }
-      val drop = typed.filter(byName)
-        .select("__graft_part").collect().map(_.getString(0)).toSet
-      VersionedTable.dropPartitionsCommit(spark, rel.path, drop,
-        readVersion = readVersion)
-    } else {
-      val tdf = PlanShim.ofRows(spark, targetPlan)
-      val condCol = PlanShim.column(condition)
-      val (keys, member) = GraftVtDml.affectedOf(tdf, condCol, pCols)
-      val rewritten = tdf.filter(member && !coalesce(condCol, lit(false)))
-      VersionedTable.rewritePartitionsCommit(spark, rel.path, keys, rewritten,
-        partitionCol, statsCol, "delete", readVersion = readVersion)
+    metadataDrop match {
+      case Some(drop) =>
+        VersionedTable.dropPartitionsCommit(spark, rel.path, drop,
+          readVersion = readVersion)
+      case None =>
+        val tdf = PlanShim.ofRows(spark, targetPlan)
+        val condCol = PlanShim.column(condition)
+        val (keys, member) = GraftVtDml.affectedOf(tdf, condCol, pCols)
+        val rewritten = tdf.filter(member && !coalesce(condCol, lit(false)))
+        VersionedTable.rewritePartitionsCommit(spark, rel.path, keys,
+          rewritten, partitionCol, statsCol, "delete",
+          readVersion = readVersion)
     }
     rel.refreshSnapshot()
     Nil

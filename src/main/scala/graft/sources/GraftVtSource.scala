@@ -37,11 +37,12 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * relation resolves the snapshot ONCE at creation (so a SQL view pins its
   * version exactly like a pinned `read()` — snapshot isolation carries
   * over), and `buildScan` re-applies Spark's pushed projection and
-  * filters to the inner DataFrame, where Catalyst pushes them into the
-  * manifest-listed parquet scan — column pruning and predicate pushdown
-  * survive the V1 boundary. `unhandledFilters` keeps every filter (the
-  * default), so Spark re-evaluates them above the scan: the translation
-  * below is a scan-pruning hint, never a correctness dependency.
+  * filters to that cached snapshot, where Catalyst pushes them into the
+  * manifest's file index ([[KnownFilesIndex]], which skips files by part
+  * key and column metrics) and the parquet scan — column pruning, file
+  * skipping and predicate pushdown survive the V1 boundary with no log
+  * replay per scan. `unhandledFilters` keeps every filter (the default),
+  * so Spark re-evaluates them above the scan.
   *
   * Catalog integration (the full SQL DDL/DML surface, all V1-native):
   *   - `CREATE TABLE t USING graftvt OPTIONS (path, partitionCol)` — a
@@ -304,20 +305,30 @@ private[graft] final class GraftVtRelation(override val sqlContext: SQLContext,
     * a pinned-version relation must refresh itself). */
   @volatile private var version: Int = initialVersion
 
-  @volatile private var snapshot: DataFrame =
-    VersionedTable.read(spark, path, version, partValues, mergeSchema)
+  /** The pinned version's snapshot and the distinct part keys of its live
+    * data and tombstone files (what the metadata-only DELETE evaluates),
+    * both from one log replay. */
+  @volatile private var pinned: (DataFrame, Seq[String]) = pin(version)
+
+  private def pin(v: Int): (DataFrame, Seq[String]) = {
+    // entries committed before the manifest recorded their partition spec
+    // take the table's declared one, so the file index still prunes them
+    // by part key
+    val declared = tableParameters.get("partitionCol")
+    val entries = VersionedTable.replayEntries(spark, path, v).map(e =>
+      if (e.action == "add" && e.pcol.isEmpty) e.copy(pcol = declared) else e)
+    (VersionedTable.read(spark, path, v, partValues, mergeSchema,
+      preEntries = Some(entries)),
+      entries.collect {
+        case e if e.action == "add" || e.action == "tomb" => e.part
+      }.distinct)
+  }
 
   def pinnedVersion: Int = version
 
-  override val schema: StructType = snapshot.schema
+  private[sources] def livePartKeys: Seq[String] = pinned._2
 
-  /** Columns the manifest records per-file min/max for — the declared
-    * stats column plus any z-order (`mstats`) columns: only predicates on
-    * these can prune files. Derived from the scan's own live-entry
-    * resolution (one log replay per buildScan, shared with partition
-    * pruning and the read itself). */
-  private def statsColsOf(entries: Seq[VersionedTable.LogEntry]): Set[String] =
-    entries.iterator.flatMap(_.statRanges.keys).toSet
+  override val schema: StructType = pinned._1.schema
 
   /** `INSERT INTO` / `INSERT OVERWRITE` on a catalog `graftvt` table —
     * Spark's InsertIntoDataSourceCommand routes here. Each statement is
@@ -346,60 +357,21 @@ private[graft] final class GraftVtRelation(override val sqlContext: SQLContext,
   }
 
   /** Re-pin to the latest committed version (after a write through this
-    * relation, or an external commit — [[GraftVtMergeCommand]] calls it). */
+    * relation, or an external commit — [[GraftVtMergeCommand]] calls it).
+    * A committed version never changes, so re-pinning the pinned one
+    * replays nothing. */
   private[graft] def refreshSnapshot(): Unit = {
-    version = VersionedTable.latestVersion(spark, path)
-    snapshot = VersionedTable.read(spark, path, version, partValues, mergeSchema)
+    val latest = VersionedTable.latestVersion(spark, path)
+    if (latest != version) {
+      pinned = pin(latest)
+      version = latest
+    }
   }
 
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
-    // ONE log replay serves this whole scan: stats-column discovery, the
-    // partition prune, and the pruned read all share `entries` (three
-    // separate replays would triple the per-query metadata cost of a
-    // long-lived table). Resolved lazily — a filterless scan reuses the
-    // cached snapshot and replays nothing.
-    // replayEntries, not liveEntries: the shared set must carry any
-    // schema-evolution entries so the pruned re-read keeps the widened
-    // schema (evolve rows are inert for pruning — empty part key, no file)
-    lazy val entries = VersionedTable.replayEntries(spark, path, version)
-    // manifest-level file skipping: conjunctive bounds over the stats
-    // column(s) decide the file list FROM THE LOG before any storage I/O —
-    // the filters are still re-applied below (and by Spark above), so the
-    // pruning is a strict scan optimization
-    val bounds =
-      if (filters.isEmpty) Map.empty[String, (Long, Long)]
-      else GraftVtRelation.statsBounds(filters, statsColsOf(entries))
-    // PARTITION pruning from the same pushed filters (Delta's behavior —
-    // a plain `WHERE pmonth = 'x'` must not list the other partitions'
-    // files at 100 TB): equality/IN predicates on the table's declared
-    // partition column(s) reduce the live-entry set by each entry's
-    // recorded part key. Value rendering is restricted to types whose
-    // toString provably matches the directory-name rendering (see
-    // partFilterValues); anything else contributes nothing — pruning
-    // stays a strict optimization.
-    val pCols = tableParameters.get("partitionCol")
-      .map(VersionedTable.partColsOf).getOrElse(Nil)
-    val allowed = GraftVtRelation.partFilterValues(filters,
-      pCols.map(_.toLowerCase).toSet)
-    val prunedParts: Option[Set[String]] =
-      if (allowed.isEmpty) partValues
-      else {
-        val keep = entries
-          .iterator.filter(_.action != "evolve").map(_.part).filter { p =>
-            val vals = VersionedTable.partValuesOf(pCols, p)
-              .map { case (c, v) => c.toLowerCase -> v }
-            allowed.forall { case (c, set) =>
-              vals.get(c).forall(set.contains) }
-          }.toSet
-        Some(partValues.fold(keep)(_ intersect keep))
-      }
-    val base =
-      if (bounds.isEmpty && prunedParts == partValues) snapshot
-      else VersionedTable.read(spark, path, version, prunedParts, mergeSchema,
-        bounds, preEntries = Some(entries))
     val filtered = filters.flatMap(toColumn)
-      .foldLeft(base)((df, c) => df.filter(c))
+      .foldLeft(pinned._1)((df, c) => df.filter(c))
     val projected =
       if (requiredColumns.isEmpty)
         // COUNT(*)-style scan: no columns requested, only row multiplicity
@@ -431,158 +403,6 @@ private[graft] final class GraftVtRelation(override val sqlContext: SQLContext,
       for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
     case Not(c)                   => toColumn(c).map(!_)
     case _                        => None
-  }
-}
-
-private[graft] object GraftVtRelation {
-
-  /** Partition-column types whose write-side rendering (cast to string →
-    * directory name) provably roundtrips through a cast back — the ONE
-    * definition both pruning-side consumers share: `partFilterValues`'
-    * literal rendering below (its boxed-class match mirrors this set) and
-    * the metadata-only DELETE path ([[GraftVtDeleteCommand]]), which may
-    * only evaluate a predicate on re-typed partition values when the
-    * types are in this set. Extending one consumer without the other
-    * would silently mis-prune or drop the wrong partitions. */
-  private[sources] val partRenderSafeTypes
-      : Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    Set(StringType, BooleanType, ByteType, ShortType, IntegerType,
-      LongType, DateType)
-  }
-
-  /** Allowed-value set per (lower-cased) PARTITION column, derived from
-    * the pushed filter conjunction — the partition-pruning dual of
-    * [[statsBounds]]. Soundness: only null-rejecting equality shapes
-    * contribute (EqualTo / non-null EqualNullSafe / all-non-null In; a
-    * partition value is never null by commit-time contract anyway), and
-    * only for literal types whose `toString` provably equals Spark's
-    * partition-directory rendering (string, boolean, integral, date) —
-    * float/decimal/timestamp renderings can diverge from the dir name, so
-    * they contribute NOTHING and pruning stays conservative. An
-    * un-understood filter contributes nothing; columns absent from the
-    * result impose no constraint. */
-  private[graft] def partFilterValues(filters: Array[Filter],
-                                      pColsLower: Set[String])
-      : Map[String, Set[String]] = {
-    if (pColsLower.isEmpty) return Map.empty
-    def render(v: Any): Option[String] = v match {
-      case null => None
-      case _: String | _: java.lang.Boolean | _: java.lang.Byte |
-           _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long |
-           _: java.sql.Date | _: java.time.LocalDate =>
-        Some(v.toString)
-      case _ => None
-    }
-    def valuesOf(f: Filter): Option[(String, Set[String])] = f match {
-      case EqualTo(a, v) if pColsLower(a.toLowerCase) =>
-        render(v).map(s => a.toLowerCase -> Set(s))
-      case EqualNullSafe(a, v) if pColsLower(a.toLowerCase) && v != null =>
-        render(v).map(s => a.toLowerCase -> Set(s))
-      case In(a, vs) if pColsLower(a.toLowerCase) && vs.nonEmpty =>
-        val rs = vs.flatMap(render(_))
-        if (rs.length == vs.length) Some(a.toLowerCase -> rs.toSet) else None
-      case And(l, r) =>
-        (valuesOf(l), valuesOf(r)) match {
-          case (Some((a, s1)), Some((b, s2))) if a == b =>
-            Some(a -> (s1 intersect s2))
-          case (one @ Some(_), _) => one
-          case (None, other)      => other
-        }
-      case Or(l, r) =>
-        for {
-          (a, s1) <- valuesOf(l)
-          (b, s2) <- valuesOf(r) if a == b
-        } yield a -> (s1 union s2)
-      case _ => None
-    }
-    filters.iterator.flatMap(valuesOf(_))
-      .foldLeft(Map.empty[String, Set[String]]) {
-        case (acc, (c, s)) =>
-          acc.updated(c, acc.get(c).fold(s)(_ intersect s))
-      }
-  }
-
-  /** Inclusive [lo, hi] bound per stats column, derived from the pushed
-    * filter conjunction. Safety rests on two facts: (1) the manifest's
-    * min/max are the file's values CAST AS LONG, and that cast (truncation
-    * toward zero) is MONOTONE — so for any row value x and predicate bound
-    * v, x ≥ v implies trunc(x) ≥ trunc(v) and likewise for ≤, meaning
-    * trunc(v) itself is a safe bound on the truncated stats for >, ≥, <,
-    * ≤ and = alike (no ±1 adjustments, no overflow); (2) only
-    * null-rejecting predicate shapes contribute (no IsNull/EqualNullSafe),
-    * since a skipped file's NULL rows — invisible to min/max — would
-    * otherwise be lost. Anything not understood contributes nothing:
-    * absent bounds mean "keep every file". Top-level filters are conjuncts
-    * (Spark's contract), so per-column bounds intersect; a disjunction
-    * contributes its children's hull, and only when both children bound
-    * the SAME column. */
-  private[graft] def statsBounds(filters: Array[Filter],
-                                 statsCols: Set[String])
-      : Map[String, (Long, Long)] = {
-    if (statsCols.isEmpty) return Map.empty
-    filters.iterator.flatMap(boundsOf(_, statsCols))
-      .foldLeft(Map.empty[String, (Long, Long)]) {
-        case (acc, (c, (lo, hi))) =>
-          val (alo, ahi) = acc.getOrElse(c, (Long.MinValue, Long.MaxValue))
-          acc.updated(c, (math.max(alo, lo), math.min(ahi, hi)))
-      }
-  }
-
-  /** Long image of a pushed literal, or None when no SAFE image exists.
-    * The soundness argument (monotone truncation, see statsBounds) only
-    * holds for finite, long-representable values: a NaN literal under
-    * Spark's NaN-greatest ordering satisfies `col < NaN` for every non-NaN
-    * row, so truncating it to 0 would prune files that match; a BigDecimal
-    * past ±2^63 would WRAP under longValue (JLS narrowing), producing an
-    * arbitrary bound. Both return None — pruning stays conservative (keep
-    * every file) for literals the Long domain can't represent. */
-  private def longOf(v: Any): Option[Long] = v match {
-    case n: Byte    => Some(n.toLong)
-    case n: Short   => Some(n.toLong)
-    case n: Int     => Some(n.toLong)
-    case n: Long    => Some(n)
-    case n: Float   => if (n.isNaN || n.isInfinite) None else Some(n.toLong)
-    case n: Double  => if (n.isNaN || n.isInfinite) None else Some(n.toLong)
-    case n: java.math.BigDecimal =>
-      scala.util.Try(n.toBigInteger.longValueExact()).toOption
-    case n: BigDecimal =>
-      scala.util.Try(n.toBigInt.bigInteger.longValueExact()).toOption
-    case _          => None
-  }
-
-  /** Bounds contributed by ONE filter (conjunct), or None. */
-  private def boundsOf(f: Filter, statsCols: Set[String])
-      : Option[(String, (Long, Long))] = f match {
-    case EqualTo(a, v) if statsCols(a) =>
-      longOf(v).map(x => a -> (x, x))
-    case GreaterThan(a, v) if statsCols(a) =>
-      longOf(v).map(x => a -> (x, Long.MaxValue))
-    case GreaterThanOrEqual(a, v) if statsCols(a) =>
-      longOf(v).map(x => a -> (x, Long.MaxValue))
-    case LessThan(a, v) if statsCols(a) =>
-      longOf(v).map(x => a -> (Long.MinValue, x))
-    case LessThanOrEqual(a, v) if statsCols(a) =>
-      longOf(v).map(x => a -> (Long.MinValue, x))
-    case In(a, vs) if statsCols(a) && vs.nonEmpty =>
-      val ls = vs.flatMap(longOf)
-      if (ls.length == vs.length) Some(a -> (ls.min, ls.max)) else None
-    case And(l, r) =>
-      // both sides are additional constraints: intersect what we learn
-      (boundsOf(l, statsCols), boundsOf(r, statsCols)) match {
-        case (Some((a, (l1, h1))), Some((b, (l2, h2)))) if a == b =>
-          Some(a -> (math.max(l1, l2), math.min(h1, h2)))
-        // different columns: either side alone is a valid (weaker) bound
-        case (one @ Some(_), _) => one
-        case (None, other)      => other
-      }
-    case Or(l, r) =>
-      // either side may hold: the hull, and only for a shared column
-      for {
-        (a, (l1, h1)) <- boundsOf(l, statsCols)
-        (b, (l2, h2)) <- boundsOf(r, statsCols) if a == b
-      } yield a -> (math.min(l1, l2), math.max(h1, h2))
-    case _ => None
   }
 }
 

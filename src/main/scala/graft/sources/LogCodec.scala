@@ -51,6 +51,7 @@ private[graft] object LogCodec {
       |  optional binary op (UTF8);
       |  optional int64 fsize;
       |  optional int64 fmtime;
+      |  optional binary pcol (UTF8);
       |}""".stripMargin)
 
   private val CheckpointSchema: MessageType = MessageTypeParser.parseMessageType(
@@ -67,10 +68,12 @@ private[graft] object LogCodec {
       |  optional binary mstats (UTF8);
       |  optional int64 fsize;
       |  optional int64 fmtime;
+      |  optional binary pcol (UTF8);
       |}""".stripMargin)
 
   /** Writes manifest rows as ONE parquet file at `dest` (driver-side; no
-    * Spark job). `withTsOp = false` writes the 10-column checkpoint shape. */
+    * Spark job). `withTsOp = false` writes the checkpoint shape (no `ts`,
+    * `op`). */
   def write(conf: Configuration, dest: Path, rows: Seq[LogRow],
             withTsOp: Boolean = true): Unit = {
     val schema = if (withTsOp) ManifestSchema else CheckpointSchema
@@ -100,6 +103,7 @@ private[graft] object LogCodec {
       }
       e.fsize.foreach(g.add("fsize", _))
       e.fmtime.foreach(g.add("fmtime", _))
+      e.pcol.foreach(g.add("pcol", _))
       writer.write(g)
     } finally writer.close()
   }
@@ -118,8 +122,8 @@ private[graft] object LogCodec {
     * each opened through [[open]] (read options from `conf`, never a
     * fresh Hadoop configuration) and decoded row group by row group.
     * Schema comes from each file's own footer; columns added over the
-    * engine's history (`fschema`, `nrec`, `scol`, `mstats`, `ts`, `op`)
-    * read as None when a file predates them. */
+    * engine's history (`fschema`, `nrec`, `scol`, `mstats`, `ts`, `op`,
+    * `fsize`, `fmtime`, `pcol`) read as None when a file predates them. */
   def read(conf: Configuration, files: Seq[Path]): Seq[LogRow] = {
     def readOne(p: Path): Seq[LogRow] = {
       val out = Seq.newBuilder[LogRow]
@@ -167,7 +171,7 @@ private[graft] object LogCodec {
       smin = lng("smin"), smax = lng("smax"),
       fschema = str("fschema"), nrec = lng("nrec"),
       scol = str("scol"), mstats = str("mstats"),
-      fsize = lng("fsize"), fmtime = lng("fmtime")),
+      fsize = lng("fsize"), fmtime = lng("fmtime"), pcol = str("pcol")),
       ts = lng("ts"), op = str("op"))
   }
 
@@ -220,7 +224,7 @@ private[graft] object LogCodec {
             // foreign writer) are NOT the same as an all-null chunk: an
             // uncounted chunk may hold any values, so treating it as
             // range-free would let manifest-based file skipping
-            // (`read`'s statsBounds) wrongly prune a matching file. Mark
+            // ([[KnownFilesIndex]]) wrongly prune a matching file. Mark
             // the column ineligible so the caller falls back to the Spark
             // stats pass.
             else if (st == null || st.isEmpty) bad += name

@@ -136,11 +136,17 @@ object VersionedTable {
   }
 
   /** Manifest partition key for one row's (string-cast) values — see
-    * [[partColsOf]] for the two encodings. */
-  private[graft] def partKeyOf(cols: Seq[String], vals: Seq[String]): String =
-    if (cols.sizeIs == 1) vals.head
-    else cols.zip(vals).map { case (c, v) =>
+    * [[partColsOf]] for the two encodings. An empty value renders as
+    * Spark's default partition name: `partitionBy` writes '' under that
+    * directory, and [[writeCommitFiles]] records the directory's value, so
+    * conflict scopes and rewrite keys must name the same key. */
+  private[graft] def partKeyOf(cols: Seq[String], vals: Seq[String]): String = {
+    val dirVals = vals.map(v =>
+      if (v.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME else v)
+    if (cols.sizeIs == 1) dirVals.head
+    else cols.zip(dirVals).map { case (c, v) =>
       s"$c=${ExternalCatalogUtils.escapePathName(v)}" }.mkString("/")
+  }
 
   /** Inverse of [[partKeyOf]]: one entry's `part` string as a column →
     * (unescaped) value map, for per-dimension partition pruning. */
@@ -173,12 +179,12 @@ object VersionedTable {
 
   /** One manifest row. `action` is add|tomb|remove|noop; `smin`/`smax` are
     * the commit's per-file min/max of the table's declared stats column
-    * (None when the table tracks none) — Iceberg-style column metrics,
-    * enabling [[read]]'s `statsBounds` to prune the file list from the log
-    * alone, without opening a single footer. `scol` NAMES the column the stats
-    * describe, so a reader that arrives with only a predicate (the SQL
-    * surface) can decide skip-eligibility from the log itself instead of
-    * requiring the caller to know the table's stats declaration out of
+    * (None when the table tracks none) — Iceberg-style column metrics, with
+    * which the snapshot's file index ([[KnownFilesIndex]]) skips files from
+    * the log alone, without opening a single footer. `scol` NAMES the column
+    * the stats describe and `pcol` the partition column spec the `part` key
+    * encodes, so any predicate Spark pushes into a scan can be checked
+    * against the log itself, with no table declaration out of
     * band. `fschema` is the JSON of the schema the file was WRITTEN with
     * (same for every file of a commit) — what lets snapshot reads compose
     * the union schema from the log instead of paying a footer read per
@@ -191,7 +197,8 @@ object VersionedTable {
                             scol: Option[String] = None,
                             mstats: Option[String] = None,
                             fsize: Option[Long] = None,
-                            fmtime: Option[Long] = None) {
+                            fmtime: Option[Long] = None,
+                            pcol: Option[String] = None) {
     /** Per-column [min, max] this entry records: the legacy single column
       * (scol/smin/smax) plus the multi-column `mstats` string. */
     def statRanges: Map[String, (Long, Long)] = {
@@ -451,28 +458,16 @@ object VersionedTable {
     * predating schema recording (or disagreeing on a field's type) fall
     * back to footer-based mergeSchema.
     *
-    * `statsBounds` (column → inclusive [lo, hi] over the LONG-CAST value,
-    * the same truncation the manifest's metrics record) skips data files
-    * whose recorded range for that column cannot intersect the bound —
-    * log-only file skipping for callers that arrive with a predicate, like
-    * the `graftvt` SQL relation. Semantics are a strict subset guarantee:
-    * every row whose column value CAST AS LONG falls in [lo, hi] survives
-    * pruning (files without stats, or with stats for a different column,
-    * are conservatively kept), so composing the exact row filter above the
-    * pruned scan is unchanged — pruning is a scan optimization, never a
-    * correctness dependency. NULL-valued rows may be dropped with a
-    * skipped file: derive bounds only from null-rejecting predicates.
-    * The union schema under mergeSchema is composed from the UNPRUNED
-    * entry set, so skipping can never change the visible schema. */
+    * A filter over the result skips files in the scan's file index
+    * ([[KnownFilesIndex]]): each file's manifest entry carries its part
+    * key and column metrics, and Spark pushes the filter there on every
+    * path (this read, the `graftvt` relation, SQL and DML). */
   def read(spark: SparkSession, path: String, version: Int,
            partValues: Option[Set[String]] = None,
            mergeSchema: Boolean = false,
-           statsBounds: Map[String, (Long, Long)] = Map.empty,
            preEntries: Option[Seq[LogEntry]] = None): DataFrame = {
-    // preEntries: the caller's already-replayed live set for `version`
-    // (the graftvt relation resolves it once per scan and shares it with
-    // stats-column discovery and partition pruning — one log replay per
-    // query, not three)
+    // preEntries: the caller's already-replayed state for `version` (a
+    // verb's snapshot, the graftvt relation's pin)
     val entriesAll = preEntries.getOrElse(replayEntries(spark, path, version))
     // schema-evolution entries (from the UNFILTERED set — partition
     // pruning must never narrow the visible schema); latest one is the
@@ -481,14 +476,7 @@ object VersionedTable {
     val entries = entriesAll.filter(e =>
       e.action != "evolve" && e.action != "constraint" &&
       partValues.forall(_(e.part)))
-    val allDataEntries = entries.filter(_.action == "add")
-    val dataEntries =
-      if (statsBounds.isEmpty) allDataEntries
-      else allDataEntries.filter { e =>
-        val ranges = e.statRanges
-        statsBounds.forall { case (c, (lo, hi)) =>
-          ranges.get(c).forall { case (mn, mx) => mn <= hi && mx >= lo } }
-      }
+    val dataEntries = entries.filter(_.action == "add")
     val dataFiles = dataEntries.map(e => resolveFile(path, e.file))
     val tombFiles = entries.collect {
       case e if e.action == "tomb" => resolveFile(path, e.file) }
@@ -507,21 +495,17 @@ object VersionedTable {
     // path keeps working across an ALTER).
     val logSchema =
       if (evolveEntries.nonEmpty)
-        effectiveSchemaOf(evolveEntries, allDataEntries)
-      else if (mergeSchema) unionSchemaOf(allDataEntries)
+        effectiveSchemaOf(evolveEntries, dataEntries)
+      else if (mergeSchema) unionSchemaOf(dataEntries)
       else uniformSchemaOf(dataEntries)
     def reader = logSchema match {
       case Some(u) => spark.read.schema(u)
       case None => spark.read.option("mergeSchema", mergeSchema.toString)
     }
-    val fileMeta: Map[String, (Long, Long)] = dataEntries.iterator.collect {
-      case e if e.fsize.isDefined =>
-        resolveFile(path, e.file) -> ((e.fsize.get, e.fmtime.getOrElse(0L)))
-    }.toMap
     val data =
       if (dataFiles.nonEmpty) {
         val df = readDataFiles(spark, path, dataFiles, () => reader,
-          knownSchema = logSchema, fileMeta = fileMeta)
+          knownSchema = logSchema, sized = sizedEntries(path, dataEntries))
         // the convert-imported split reads with basePath partition
         // reconstruction, and Spark renders reconstructed partition
         // columns LAST regardless of the requested schema — which
@@ -590,6 +574,14 @@ object VersionedTable {
   private[graft] def resolveFile(path: String, rel: String): String =
     if (isAbsoluteRef(rel)) rel else s"$path/$rel"
 
+  /** Absolute path → entry, for the add entries that record their size. */
+  private def sizedEntries(path: String, entries: Seq[LogEntry])
+      : Map[String, LogEntry] =
+    entries.iterator.collect {
+      case e if e.action == "add" && e.fsize.isDefined =>
+        resolveFile(path, e.file) -> e
+    }.toMap
+
   /** Read a commit's data files, splitting engine-written files (columns
     * complete in content) from convert-imported external files (partition
     * columns reconstructed from their key=value directories via
@@ -604,7 +596,7 @@ object VersionedTable {
                             absFiles: Seq[String],
                             mkReader: () => org.apache.spark.sql.DataFrameReader,
                             knownSchema: Option[StructType] = None,
-                            fileMeta: Map[String, (Long, Long)] = Map.empty)
+                            sized: Map[String, LogEntry] = Map.empty)
       : DataFrame = {
     val prefix = s"$path/"
     // under THIS table, the layout decides; a cross-table (clone)
@@ -613,20 +605,18 @@ object VersionedTable {
     // always reads plain
     val (own, ext) = absFiles.partition(f =>
       !f.startsWith(prefix) || engineOwned(f.stripPrefix(prefix)))
-    // engine-written files whose (size, mtime) the manifest recorded and
-    // whose schema the log resolved scan through a manifest-backed file
-    // index: zero listing / per-file status I/O before the scan starts
-    // (the Delta/Iceberg shape — the manifest IS the file index). Files
-    // predating fsize recording, or reads without a log-resolved schema,
-    // keep the plain reader.
+    // engine-written files whose size the manifest recorded and whose
+    // schema the log resolved scan through the manifest's file index: zero
+    // listing / per-file status I/O before the scan starts (the
+    // Delta/Iceberg shape — the manifest IS the file index), and the
+    // pushed filters skip files from each one's entry. Files predating
+    // fsize recording, or reads without a log-resolved schema, keep the
+    // plain reader and lose that skipping.
     val ownDf =
       if (own.isEmpty) None
-      else (knownSchema, if (own.forall(fileMeta.contains)) Some(own) else None)
-        match {
-        case (Some(u), Some(fs)) =>
-          Some(org.apache.spark.sql.graftshim.FileIndexShim.parquetKnownFiles(
-            spark, fs.map(f => {
-              val (len, mt) = fileMeta(f); (f, len, mt) }), u))
+      else knownSchema match {
+        case Some(u) if own.forall(sized.contains) =>
+          Some(KnownFilesIndex.scan(spark, own.map(f => f -> sized(f)), u))
         case _ => Some(mkReader().parquet(own: _*))
       }
     val parts = Seq(
@@ -814,7 +804,8 @@ object VersionedTable {
         // per-file status fetches (Delta/Iceberg record size for the
         // same reason; length also drives split planning, so it must be
         // the file's real on-disk length)
-        fsize = Some(flen), fmtime = Some(fmt))
+        fsize = Some(flen), fmtime = Some(fmt),
+        pcol = Some(pCols.mkString(",")))
     }
   }
 
@@ -1996,10 +1987,7 @@ object VersionedTable {
     // manifest recorded them — same manifest-backed scan as read()
     val addByFile: Map[String, LogEntry] = all
       .collect { case e if e.action == "add" => e.file -> e }.toMap
-    val metaByAbs: Map[String, (Long, Long)] = all.iterator.collect {
-      case e if e.action == "add" && e.fsize.isDefined =>
-        resolveFile(path, e.file) -> ((e.fsize.get, e.fmtime.getOrElse(0L)))
-    }.toMap
+    val sized = sizedEntries(path, all)
     def schemaOfFiles(absFiles: Seq[String]): Option[StructType] = {
       val rels = absFiles.map { f =>
         if (f.startsWith(s"$path/")) f.stripPrefix(s"$path/") else f }
@@ -2052,11 +2040,11 @@ object VersionedTable {
         val added = if (addF.isEmpty) None
           else Some(tombFilter(
             readDataFiles(spark, path, addF, () => reader,
-              knownSchema = schemaOfFiles(addF), fileMeta = metaByAbs), v))
+              knownSchema = schemaOfFiles(addF), sized = sized), v))
         val removedRows = if (remDataF.isEmpty) None
           else Some(tombFilter(
             readDataFiles(spark, path, remDataF, () => reader,
-              knownSchema = schemaOfFiles(remDataF), fileMeta = metaByAbs),
+              knownSchema = schemaOfFiles(remDataF), sized = sized),
             v - 1))
         (added, removedRows) match {
           case (None, None)    => Nil

@@ -20,6 +20,11 @@ object PlanShim {
 
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 
+  /** `schema` with every field nullable, nested ones too — how file
+    * sources read any schema. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** A Column over an already-RESOLVED Catalyst expression (attribute refs
     * keep their exprIds, so the analyzer re-binds them against any plan
     * that still carries those attributes — the mechanism every MERGE

@@ -115,6 +115,51 @@ class GraftVtDmlSpec extends AnyFunSuite {
     spark.sql("DROP TABLE vt_dml_d2")
   }
 
+  test("UPDATE and DELETE of an empty-string partition value") {
+    val dir = Files.createTempDirectory("graft_dml_de").toString + "/t"
+    import spark.implicits._
+    VersionedTable.create(spark, dir,
+      Seq((1L, 10L, ""), (2L, 20L, ""), (3L, 30L, "a")).toDF("k", "v", "p"),
+      "p")
+    spark.sql("DROP TABLE IF EXISTS vt_dml_de")
+    spark.sql("CREATE TABLE vt_dml_de USING graftvt " +
+      s"OPTIONS (path '$dir', partitionCol 'p')")
+    // the manifest keys '' by Spark's default partition name: the rewrite
+    // must replace the files under that key, not add beside them
+    spark.sql("UPDATE vt_dml_de SET v = v + 1 WHERE p = ''")
+    assert(spark.sql("SELECT k, v FROM vt_dml_de ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 11L), (2L, 21L), (3L, 30L)))
+    // the partition rule cannot decide that key: the rows decide instead
+    spark.sql("DELETE FROM vt_dml_de WHERE p = ''")
+    assert(spark.sql("SELECT k FROM vt_dml_de").collect()
+      .map(_.getLong(0)).toSeq == Seq(3L))
+    spark.sql("DROP TABLE vt_dml_de")
+  }
+
+  test("DELETE through to_date and nvl on partition columns stays metadata-only") {
+    val dir = Files.createTempDirectory("graft_dml_dd").toString + "/t"
+    import spark.implicits._
+    VersionedTable.create(spark, dir, Seq(
+      (1L, java.sql.Date.valueOf("2024-01-01"), "p1"),
+      (2L, java.sql.Date.valueOf("2024-01-02"), "p1"),
+      (3L, java.sql.Date.valueOf("2024-01-03"), "p2")).toDF("k", "d", "p"),
+      "d,p")
+    spark.sql("DROP TABLE IF EXISTS vt_dml_dd")
+    spark.sql("CREATE TABLE vt_dml_dd USING graftvt " +
+      s"OPTIONS (path '$dir', partitionCol 'd,p')")
+    spark.sql("DELETE FROM vt_dml_dd WHERE d >= to_date('2024-01-02') " +
+      "AND p = nvl(null, 'p1')")
+    spark.sql("DELETE FROM vt_dml_dd WHERE p = nvl('p2', 'x')")
+    assert(spark.sql("SELECT k FROM vt_dml_dd").collect()
+      .map(_.getLong(0)).toSeq == Seq(1L))
+    assert(ops(dir) == Seq("create", "delete", "delete"))
+    val added = VersionedTable.history(spark, dir).orderBy("version")
+      .select("n_added").collect().map(_.getLong(0)).toSeq
+    assert(added.tail == Seq(0L, 0L), added.toString)
+    spark.sql("DROP TABLE vt_dml_dd")
+  }
+
   test("DELETE on a row predicate is COW over the affected partitions") {
     val dir = newTable("graft_dml_dr", "vt_dml_d3")
     spark.sql("DELETE FROM vt_dml_d3 WHERE k % 3 = 1") // k=1 (p0), k=4 (p1)

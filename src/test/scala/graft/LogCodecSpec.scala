@@ -23,7 +23,8 @@ class LogCodecSpec extends AnyFunSuite {
     val rows = Seq(
       LogCodec.LogRow(LogEntry(3, "add", "data/c1/f1.parquet", "p=1",
         Some(-5L), Some(99L), Some("{\"type\":\"struct\",\"fields\":[]}"),
-        Some(42L), Some("k"), Some("k:1:9;v:2:8"), Some(1234L), Some(777L)),
+        Some(42L), Some("k"), Some("k:1:9;v:2:8"), Some(1234L), Some(777L),
+        Some("p")),
         Some(111L), Some("append txn=a/7")),
       LogCodec.LogRow(LogEntry(3, "remove", "data/c0/f0.parquet", "p=0",
         None, None, None, None, None, None), Some(111L), Some("append")),
@@ -37,7 +38,7 @@ class LogCodecSpec extends AnyFunSuite {
     val viaSpark = spark.read.parquet(f.toString)
     assert(viaSpark.columns.toSeq == Seq("version", "action", "file", "part",
       "smin", "smax", "fschema", "nrec", "scol", "mstats", "ts", "op",
-      "fsize", "fmtime"))
+      "fsize", "fmtime", "pcol"))
     assert(viaSpark.count() == 3)
   }
 

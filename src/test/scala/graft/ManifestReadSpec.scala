@@ -142,6 +142,37 @@ class ManifestReadSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, dir, 4).count() == 29)
   }
 
+  /** The SQL surface over a one-version catalog table (the 30 rows at v0,
+    * stats on `k`): the statement's relation pins v0 with one replay, a
+    * scan replays nothing, and a DML statement adds only its commit's read
+    * and the re-pin to the version it wrote (which replays v0 and v1). */
+  private lazy val ext = TestSpark.extensionSession()
+
+  private val statements: Seq[(String, String, Map[Int, Int])] = Seq(
+    ("a filtered SELECT", "SELECT sum(v) FROM %s WHERE k > 20 AND p = 'p1'",
+      Map(0 -> 1)),
+    ("a metadata-only DELETE", "DELETE FROM %s WHERE p = 'p1'",
+      Map(0 -> 3, 1 -> 1)),
+    ("a row DELETE", "DELETE FROM %s WHERE k = 4",
+      Map(0 -> 3, 1 -> 1)),
+    ("an UPDATE", "UPDATE %s SET v = 0 WHERE k = 4",
+      Map(0 -> 3, 1 -> 1)))
+
+  statements.zipWithIndex.foreach { case ((what, stmt, want), i) =>
+    test(s"SQL: $what opens each manifest at most once per read") {
+      val dir = Files.createTempDirectory("graft_mr").toString + "/t"
+      val df = spark.range(30).select(($"id" + 1).as("k"), ($"id" * 10).as("v"),
+        concat(lit("p"), ($"id" % 3).cast("string")).as("p"))
+      VersionedTable.create(spark, dir, df, "p", Some("k"))
+      val name = s"vt_mr_sql$i"
+      ext.sql(s"DROP TABLE IF EXISTS $name")
+      ext.sql(s"CREATE TABLE $name USING graftvt " +
+        s"OPTIONS (path '$dir', partitionCol 'p', statsCol 'k')")
+      try assert(opens(dir)(ext.sql(stmt.format(name)).collect()) == want)
+      finally ext.sql(s"DROP TABLE $name")
+    }
+  }
+
   test("cloneCommit opens each source manifest once") {
     val src = newTable()
     val dst = Files.createTempDirectory("graft_mr").toString + "/c"

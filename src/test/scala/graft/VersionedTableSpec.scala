@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.sources.VersionedTable
+import graft.sources.{KnownFilesIndex, VersionedTable}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -199,14 +199,12 @@ class VersionedTableSpec extends AnyFunSuite {
       baseDf.filter($"k" > 15), "p", Some("k"))
     val entries = VersionedTable.liveEntries(spark, dir, 1)
     assert(entries.forall(e => e.smin.nonEmpty && e.smax.nonEmpty))
-    val pruned = VersionedTable.read(spark, dir, 1,
-      statsBounds = Map("k" -> ((20L, 25L))))
-    assert(pruned.inputFiles.length < entries.size)
-    // lossless: pruned read + residual filter ≡ full read + filter
-    val full = VersionedTable.read(spark, dir, 1)
-      .filter($"k".between(20, 25)).select($"k").collect().map(_.getLong(0)).toSet
-    val viaPruned = pruned
-      .filter($"k".between(20, 25)).select($"k").collect().map(_.getLong(0)).toSet
+    val pruned = VersionedTable.read(spark, dir, 1).filter($"k".between(20, 25))
+    assert(KnownFilesIndex.filesScanned(pruned) < entries.size)
+    // lossless: the skipping scan ≡ the full read filtered on the driver
+    val full = VersionedTable.read(spark, dir, 1).select($"k").collect()
+      .map(_.getLong(0)).filter(k => k >= 20 && k <= 25).toSet
+    val viaPruned = pruned.select($"k").collect().map(_.getLong(0)).toSet
     assert(viaPruned == full && full == (20L to 25L).toSet)
     // checkpoint carries the stats through replay (entries re-stamped with
     // the checkpoint's version — compare the stable fields)
@@ -227,14 +225,13 @@ class VersionedTableSpec extends AnyFunSuite {
     // the manifest NAMES the stats column — a reader arriving with only a
     // predicate can decide skip-eligibility from the log itself
     assert(entries.forall(_.scol.contains("k")))
-    // library path: bounds prune the file list, result stays lossless
-    val pruned = VersionedTable.read(spark, dir, 1, None, false,
-      Map("k" -> (20L, 25L)))
-    assert(pruned.inputFiles.length < entries.size)
-    assert(pruned.filter($"k".between(20, 25)).count() == 6)
-    // bounds on a column with no recorded stats prune nothing
-    assert(VersionedTable.read(spark, dir, 1, None, false,
-      Map("v" -> (0L, 1L))).inputFiles.length == entries.size)
+    // library path: a filter prunes the file list, result stays lossless
+    val pruned = VersionedTable.read(spark, dir, 1).filter($"k".between(20, 25))
+    assert(KnownFilesIndex.filesScanned(pruned) < entries.size)
+    assert(pruned.count() == 6)
+    // a filter on a column with no recorded stats prunes nothing
+    assert(KnownFilesIndex.filesScanned(VersionedTable.read(spark, dir, 1)
+      .filter($"v".between(0, 1))) == entries.size)
     // SQL path end-to-end: the pushed filter's rows come back exactly
     val sql = spark.read.format("graftvt").load(dir)
       .filter($"k" >= 20 && $"k" <= 25)
@@ -246,26 +243,6 @@ class VersionedTableSpec extends AnyFunSuite {
       VersionedTable.read(spark, dir, 1).filter($"v" % 7 === 0).count())
   }
 
-  test("statsBounds derives conservative conjunctive bounds from pushed filters") {
-    import org.apache.spark.sql.sources._
-    val sc = Set("k")
-    def b(fs: Filter*) = graft.sources.GraftVtRelation.statsBounds(fs.toArray, sc)
-    assert(b(EqualTo("k", 7)) == Map("k" -> (7L, 7L)))
-    // conjuncts intersect; > and >= are both a floor at the truncated value
-    assert(b(GreaterThan("k", 5L), LessThanOrEqual("k", 9L)) ==
-      Map("k" -> (5L, 9L)))
-    // IN → hull; a non-numeric member defeats the bound entirely
-    assert(b(In("k", Array(3, 11, 6))) == Map("k" -> (3L, 11L)))
-    assert(b(In("k", Array(3, "x"))) == Map.empty)
-    // OR takes the hull only when both children bound the same column
-    assert(b(Or(EqualTo("k", 2), EqualTo("k", 20))) == Map("k" -> (2L, 20L)))
-    assert(b(Or(EqualTo("k", 2), EqualTo("other", 20))) == Map.empty)
-    // null-accepting and non-stats predicates contribute nothing
-    assert(b(EqualNullSafe("k", 5), IsNull("k"), EqualTo("other", 1)) == Map.empty)
-    // truncation monotonicity: a double bound uses its long truncation
-    assert(b(GreaterThanOrEqual("k", 4.7)) == Map("k" -> (4L, Long.MaxValue)))
-  }
-
   test("all-null stats file records no metrics and survives any bound") {
     val dir = Files.createTempDirectory("graft_vt").toString + "/t"
     // v column is entirely null in this commit: min/max are undefined and
@@ -274,9 +251,9 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.create(spark, dir, nulls, "p", Some("v"))
     val entries = VersionedTable.liveEntries(spark, dir, 0)
     assert(entries.forall(e => e.smin.isEmpty && e.smax.isEmpty && e.scol.isEmpty))
-    // no stats → conservatively kept under any bound
-    assert(VersionedTable.read(spark, dir, 0, None, false,
-      Map("v" -> (5L, 6L))).inputFiles.length == entries.size)
+    // no stats → conservatively kept under any filter
+    assert(KnownFilesIndex.filesScanned(VersionedTable.read(spark, dir, 0)
+      .filter($"v".between(5, 6))) == entries.size)
   }
 
   test("zorderCommit: clustered rewrite records 2-column stats; 2D bounds prune") {
@@ -295,11 +272,11 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(entries.forall(e => e.statRanges.keySet == Set("x", "y")))
     // the first-quadrant rectangle is 1/16 of the space: a z-range layout
     // must confine it to a strict subset of the files
-    val bounds = Map("x" -> (0L, 15L), "y" -> (0L, 15L))
-    val pruned = VersionedTable.read(spark, dir, 1, None, false, bounds)
-    assert(pruned.inputFiles.length < entries.size)
-    // losslessness: pruned scan + residual filter ≡ the exact rectangle
-    assert(pruned.filter($"x" <= 15 && $"y" <= 15).count() == 256)
+    val pruned = VersionedTable.read(spark, dir, 1)
+      .filter($"x".between(0, 15) && $"y".between(0, 15))
+    assert(KnownFilesIndex.filesScanned(pruned) < entries.size)
+    // losslessness: the skipping scan returns the exact rectangle
+    assert(pruned.count() == 256)
     // content unchanged by the rewrite; v0 still time-travels
     assert(VersionedTable.read(spark, dir, 1).agg(sum($"k")).collect()(0)
       .getLong(0) == 4096L * 4095 / 2)
@@ -787,10 +764,8 @@ class VersionedTableSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_vt").toString + "/t"
     VersionedTable.create(spark, dir, baseDf, "p", Some("k"))
     VersionedTable.deleteCommit(spark, dir, Seq((22L, "p0")).toDF("k", "p"), "p")
-    val ks = VersionedTable.read(spark, dir, 1,
-        statsBounds = Map("k" -> ((20L, 25L))))
-      .filter($"k".between(20, 25)).select($"k")
-      .collect().map(_.getLong(0)).toSet
+    val ks = VersionedTable.read(spark, dir, 1).filter($"k".between(20, 25))
+      .select($"k").collect().map(_.getLong(0)).toSet
     assert(ks == Set(20L, 21L, 23L, 24L, 25L))
   }
 
@@ -804,11 +779,10 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.dropColumnsCommit(spark, dir, Seq("v"), "p")
     VersionedTable.addColumnsCommit(spark, dir, Seq(StructField("w", LongType)))
     val live = VersionedTable.liveEntries(spark, dir, 3)
-    val pruned = VersionedTable.read(spark, dir, 3,
-      statsBounds = Map("k" -> ((20L, 25L))))
+    val pruned = VersionedTable.read(spark, dir, 3).filter($"k".between(20, 25))
     assert(pruned.columns.toSeq == Seq("k", "p", "w"))
-    assert(pruned.inputFiles.length < live.size)
-    assert(pruned.filter($"k".between(20, 25)).count() == 6)
+    assert(KnownFilesIndex.filesScanned(pruned) < live.size)
+    assert(pruned.count() == 6)
   }
 
   // ---- change data feed ----

@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import graft.sources.VersionedTable
+import graft.sources.{KnownFilesIndex, VersionedTable}
+import org.apache.spark.sql.Column
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -135,8 +136,8 @@ class VtMultiPartSpec extends AnyFunSuite {
       .find(_.part == "date=d1/src=a").get.file
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$victim"),
       Array.fill[Byte](64)(0))
-    val df = spark.read.format("graftvt")
-      .option("partitionCol", "date,src").load(dir)
+    // no partitionCol option: the manifest's part keys name their columns
+    val df = spark.read.format("graftvt").load(dir)
     intercept[Exception](df.count()) // full scan opens the corrupted file
     // equality prune on the FIRST column alone
     assert(df.filter(col("date") === "d2").count() == 3L)
@@ -150,35 +151,47 @@ class VtMultiPartSpec extends AnyFunSuite {
     intercept[Exception](df.filter(col("v") > 15).count())
   }
 
-  test("partFilterValues: sound derivation from pushed filters") {
-    import org.apache.spark.sql.sources._
-    import graft.sources.GraftVtRelation.partFilterValues
-    val p = Set("date", "src")
-    assert(partFilterValues(Array(EqualTo("date", "d1")), p) ==
-      Map("date" -> Set("d1")))
-    assert(partFilterValues(
-      Array(EqualTo("date", "d1"), In("src", Array("a", "b"))), p) ==
-      Map("date" -> Set("d1"), "src" -> Set("a", "b")))
-    // Or over the same column = union; over different columns = nothing
-    assert(partFilterValues(
-      Array(Or(EqualTo("date", "d1"), EqualTo("date", "d2"))), p) ==
-      Map("date" -> Set("d1", "d2")))
-    assert(partFilterValues(
-      Array(Or(EqualTo("date", "d1"), EqualTo("src", "a"))), p).isEmpty)
-    // conflicting conjuncts intersect to the empty set (scan zero files)
-    assert(partFilterValues(
-      Array(EqualTo("date", "d1"), EqualTo("date", "d2")), p) ==
-      Map("date" -> Set.empty[String]))
-    // unsupported renderings contribute nothing (double literal)
-    assert(partFilterValues(
-      Array(EqualTo("date", java.lang.Double.valueOf(1.5))), p).isEmpty)
-    // null-ish shapes contribute nothing
-    assert(partFilterValues(Array(IsNull("date")), p).isEmpty)
-    assert(partFilterValues(Array(EqualNullSafe("date", null)), p).isEmpty)
-    // In with any unrenderable element contributes nothing
-    assert(partFilterValues(
-      Array(In("date", Array[Any]("d1", java.lang.Double.valueOf(2.0)))), p)
-      .isEmpty)
+  test("partition rule: pushed filters select exactly the matching " +
+       "sub-partitions") {
+    val dir = newTable()
+    val df = VersionedTable.read(spark, dir, 0)
+    /** (files scanned, keys returned) for `cond`; the keys must equal the
+      * same predicate evaluated without the file index. */
+    def run(cond: Column): (Long, Seq[Long]) = {
+      val got = df.filter(cond)
+      val keys = got.select("k").collect().map(_.getLong(0)).sorted.toSeq
+      val all = df.collect()
+      val expect = spark.createDataFrame(all.toSeq.asJava, df.schema)
+        .filter(cond).select("k").collect().map(_.getLong(0)).sorted.toSeq
+      assert(keys == expect, s"$cond: $keys vs $expect")
+      (KnownFilesIndex.filesScanned(got), keys)
+    }
+    assert(run(col("date") === "d1") == ((2L, Seq(1L, 2L))))
+    assert(run(col("date") === "d1" && col("src").isin("a", "b")) ==
+      ((2L, Seq(1L, 2L))))
+    // Or over the same column = union; over different columns = both
+    assert(run(col("date") === "d1" || col("date") === "d2")._1 == 4L)
+    assert(run(col("date") === "d1" || col("src") === "a") ==
+      ((3L, Seq(1L, 2L, 3L))))
+    // conflicting conjuncts select no file
+    assert(run(col("date") === "d1" && col("date") === "d2") == ((0L, Nil)))
+    // a double literal compares through a cast, decided by Spark's own
+    // evaluation: no key casts outside ANSI mode; under it, the cast
+    // fails in the scan, not in the index
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try assert(run(col("date") === 1.5) == ((0L, Nil)))
+    finally spark.conf.set("spark.sql.ansi.enabled", prior)
+    intercept[Exception](df.filter(col("date") === 1.5).count())
+    // null-ish shapes: no partition value is null
+    assert(run(col("date").isNull) == ((0L, Nil)))
+    assert(run(col("date") <=> lit(null).cast("string")) == ((0L, Nil)))
+    assert(run(col("date") <=> "d2")._1 == 2L)
+    // NOT and a range over a partition column
+    assert(run(!(col("src") === "a")) == ((2L, Seq(2L, 4L, 5L))))
+    assert(run(col("date") >= "d2") == ((2L, Seq(3L, 4L, 5L))))
+    // a predicate mixing a partition and a data column decides nothing
+    assert(run(col("date") === "d1" || col("v") > 35)._1 == 4L)
   }
 
   test("escaped values round-trip in the part fragment") {
